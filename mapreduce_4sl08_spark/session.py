@@ -14,14 +14,25 @@ local[32]:
   columnar batches, never pickled rows.
 - UTC session timezone: deterministic timestamp semantics vs the DuckDB
   oracle.
-- shuffle.partitions: modest default for local test scale; AQE coalesces
-  down and, on a real cluster, a job-level override scales it up.
+- shuffle.partitions: one per task slot (``sc.defaultParallelism``), set
+  once the session exists; no fixed count ships. Structured Streaming
+  runs with AQE off, so every micro-batch runs every shuffle partition,
+  and a stateful query fixes its state-store partition count (= shuffle
+  partitions) at first start and records it in its checkpoint: a count
+  sized for a bigger box taxes every micro-batch on a smaller one. Batch
+  shuffles are coalesced by AQE either way. The count also sizes the
+  post-scan fan-out (sources/tables._scan_fanout_n); ``cluster_conf``
+  sizes it from the input for a real cluster.
+- parquet.nanosAsLong: events.parquet has shipped as TIMESTAMP(NANOS),
+  which Spark reads only as an epoch-ns long; sources/tables.load_table
+  converts it. Set once per session here, never per load.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 # Defaults applied to sessions we build ourselves AND (where dynamic)
@@ -36,7 +47,6 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    "spark.sql.shuffle.partitions": "32",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.showConsoleProgress": "false",
     # reliable .checkpoint() data (SPARK_GRAFT_CHECKPOINT_DIR path in
@@ -45,7 +55,18 @@ ENGINE_CONF: dict[str, str] = {
     # r6). With it, the ContextCleaner removes a checkpoint's files once
     # the RDD is GC'd, same lifecycle as localCheckpoint blocks.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # a TIMESTAMP(NANOS) events.parquet reads as an epoch-ns long,
+    # converted exactly in sources/tables.load_table
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _size_shuffle_to_task_slots(spark: SparkSession) -> None:
+    """One shuffle partition per task slot of the session's context."""
+    spark.conf.set(SHUFFLE_PARTITIONS,
+                   str(spark.sparkContext.defaultParallelism))
 
 
 def get_session(app_name: str = "mapreduce_4sl08_spark",
@@ -55,6 +76,15 @@ def get_session(app_name: str = "mapreduce_4sl08_spark",
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     for tests/bench; on a real cluster, leave it to spark-submit.
+
+    Shuffle partitions are set to the context's task slots
+    (``sc.defaultParallelism``) once the session exists, unless
+    ``extra_conf`` names a count — an explicit value always wins, and
+    ``cluster_conf`` is the input-sized override for a real cluster.
+    The count matters most to streaming: AQE is off there, and a
+    stateful query keeps the state-store partition count it started
+    with (the checkpoint records it), so a fixed count tuned for a big
+    box taxes every micro-batch on a small one.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -73,6 +103,8 @@ def get_session(app_name: str = "mapreduce_4sl08_spark",
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if SHUFFLE_PARTITIONS not in (extra_conf or {}):
+        _size_shuffle_to_task_slots(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -98,7 +130,7 @@ def cluster_conf(total_cores: int, input_bytes: int,
                     min(input_bytes // target_shuffle_bytes + 1, 500_000))
     return {
         **ENGINE_CONF,
-        "spark.sql.shuffle.partitions": str(n_shuffle),
+        SHUFFLE_PARTITIONS: str(n_shuffle),
         "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(128 * 1024 * 1024),
         # keep per-task state well under executor memory
@@ -163,12 +195,15 @@ def free_checkpoint(df: "DataFrame") -> None:  # noqa: F821
     Best-effort by design: on the reliable .checkpoint() path the
     LogicalRDD wraps a ReliableCheckpointRDD that was never persisted
     (unpersist is a harmless no-op; file cleanup stays with the
-    ContextCleaner via cleanCheckpoints=true), and on any plan-shape or
-    private-API drift we silently leave the blocks to the GC-driven
-    cleaner — the pre-r22 behavior."""
+    ContextCleaner via cleanCheckpoints=true), and a frame whose logical
+    root is not a LogicalRDD (no ``rdd()`` method: a Py4J error) or a
+    session without a JVM handle (no ``_jdf``: an AttributeError) leaves
+    the blocks to the GC-driven cleaner — the pre-r22 behavior. Any
+    other error propagates. tests/test_session_conf.py holds a canary
+    that fails if the private-API path stops releasing the blocks."""
     try:
         df._jdf.queryExecution().logical().rdd().unpersist(False)
-    except Exception:
+    except (Py4JError, AttributeError):
         pass
 
 
@@ -176,10 +211,13 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Best-effort apply of *dynamic* engine confs to an externally-built
     session (the driver hands us one in ``__spark_entry__.entry``).
     Static confs (serializer, arrow) are skipped automatically by Spark.
+    Shuffle partitions follow the same rule as ``get_session``: one per
+    task slot of the session's context.
     """
     for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a live session — keep the session's value
+    _size_shuffle_to_task_slots(spark)
     return spark

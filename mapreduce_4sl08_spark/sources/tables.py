@@ -9,6 +9,7 @@ driver — the #1 scale ceiling of the reference (SURVEY §4.3).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -159,11 +160,25 @@ def _parse_bytes(v: str) -> int:
 def _scan_fanout_n(spark: SparkSession, path: str) -> int:
     """Target partition count for the post-scan fan-out, or 0 to leave
     the scan's own split parallelism alone. ``SPARK_GRAFT_SCAN_FANOUT``
-    overrides: ``off``/``0`` disables, an integer pins the count,
-    ``auto`` (default) derives it from input size vs session conf."""
+    overrides: ``off``/``0`` disables, a positive integer pins the
+    count, ``auto`` (default) derives it from input size vs the
+    session's shuffle partitions (one per task slot, session.py). Any
+    other value (``false``, ``-1``) also disables, with a warning: a
+    typo'd knob most plausibly means "off", and it must neither take
+    the plan build down nor flow a bad count into repartition()."""
     mode = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "auto").strip().lower()
     if mode in ("off", "0"):
         return 0
+    if mode != "auto":
+        try:
+            pinned = int(mode)
+        except ValueError:
+            pinned = 0
+        if pinned <= 0:
+            warnings.warn(f"SPARK_GRAFT_SCAN_FANOUT={mode!r} is not 'auto', "
+                          "'off' or a positive integer; scan fan-out is off",
+                          stacklevel=2)
+            return 0
     try:
         if os.path.isdir(path):
             sizes = [e.stat().st_size for e in os.scandir(path)
@@ -175,15 +190,7 @@ def _scan_fanout_n(spark: SparkSession, path: str) -> int:
     if sum(sizes) < _FANOUT_MIN_BYTES:
         return 0
     if mode != "auto":
-        # a typo'd value ('false', '-4') must not take the plan build
-        # down or flow a negative count into repartition() (ADVICE r21
-        # item 1): unparseable or non-positive pins fall back to auto
-        try:
-            pinned = int(mode)
-        except ValueError:
-            pinned = -1
-        if pinned > 0:
-            return pinned
+        return pinned
     try:
         max_pb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -218,9 +225,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     TIMESTAMP_NTZ). Both normalize to session-zone TimestampType here —
     the session zone is pinned UTC (session.py), so the value equals the
     naive instant DuckDB sees, and downstream epoch math (`unix_micros`)
-    stays valid. This is the ONLY place ts typing is handled."""
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    stays valid. This is the ONLY place ts typing is handled. Reading
+    the NANOS variant needs ``spark.sql.legacy.parquet.nanosAsLong``,
+    which session.ENGINE_CONF sets once per session: this function
+    writes no session conf, so concurrent plan builds never race on it."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if quarantine:
         # Quarantine on the RAW columns, BEFORE the events ts

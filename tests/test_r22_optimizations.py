@@ -9,9 +9,10 @@
 3. tests/parallel_sweep: the thread-pooled sweep preserves per-item
    outcomes exactly (exception objects re-raised with type and
    message intact, all keys present, passes map to None);
-4. the fan-out env pin robustness (ADVICE r21 item 1): a typo'd or
-   negative SPARK_GRAFT_SCAN_FANOUT falls back to auto instead of
-   crashing the plan build or passing a negative count to repartition;
+4. the fan-out env pin robustness (ADVICE r21 item 1, r22 item 2): a
+   typo'd or non-positive SPARK_GRAFT_SCAN_FANOUT turns the fan-out off
+   with a warning instead of crashing the plan build, passing a
+   negative count to repartition, or silently enabling it;
 5. langid_confusion_matrix's fan-out (the one enabled winner of the
    r22 heavy-map/low-card-agg A/B class) is present in the plan when
    the gate fires.
@@ -94,12 +95,13 @@ def test_parallel_sweep_outcomes_exact():
 
 def test_fanout_env_pin_robust(spark, sf_dir, monkeypatch):
     path = os.path.join(sf_dir, "documents.parquet")
-    auto = _scan_fanout_n(spark, path)
-    # a typo'd value and a negative pin both fall back to auto (ADVICE
-    # r21 item 1) — no ValueError, no negative count into repartition
-    for bad in ("false", "-4"):
+    assert _scan_fanout_n(spark, path) > 0  # auto fires: "off" is visible
+    # a typo'd value and a non-positive pin both mean off, loudly — no
+    # ValueError, no negative count into repartition, no silent auto
+    for bad in ("false", "-1", "-4"):
         monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", bad)
-        assert _scan_fanout_n(spark, path) == auto, bad
+        with pytest.warns(UserWarning, match="scan fan-out is off"):
+            assert _scan_fanout_n(spark, path) == 0, bad
     # a sane positive pin is honored verbatim
     monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "7")
     assert _scan_fanout_n(spark, path) == 7

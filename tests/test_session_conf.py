@@ -1,0 +1,125 @@
+"""Session configuration contracts (mapreduce_4sl08_spark/session.py):
+
+1. shuffle partitions follow one rule — the session's task slots
+   (``sc.defaultParallelism``) — in both ``get_session`` and
+   ``apply_engine_conf``; an explicit ``extra_conf`` count wins;
+2. ``sources.tables.load_table`` writes no session conf (the
+   TIMESTAMP(NANOS) read conf is an engine default), and the NANOS and
+   MICROS events variants normalize to the same rows;
+3. ``free_checkpoint`` still releases a superseded localCheckpoint
+   through its private-API path (a canary for Spark-internal drift),
+   and lets errors other than Py4J/attribute ones propagate.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from mapreduce_4sl08_spark.session import (
+    ENGINE_CONF, SHUFFLE_PARTITIONS, apply_engine_conf, free_checkpoint,
+    get_session, truncate_lineage)
+from mapreduce_4sl08_spark.sources.tables import TABLE_NAMES, load_table
+
+
+def test_engine_conf_ships_no_shuffle_partition_count():
+    assert SHUFFLE_PARTITIONS not in ENGINE_CONF
+
+
+def test_apply_engine_conf_sizes_shuffle_to_task_slots(spark):
+    slots = spark.sparkContext.defaultParallelism
+    fresh = spark.newSession()
+    fresh.conf.set(SHUFFLE_PARTITIONS, str(slots + 5))
+    apply_engine_conf(fresh)
+    assert int(fresh.conf.get(SHUFFLE_PARTITIONS)) == slots
+
+
+def test_get_session_extra_conf_count_wins(spark):
+    slots = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(SHUFFLE_PARTITIONS)
+    try:
+        pinned = get_session("tests", extra_conf={
+            SHUFFLE_PARTITIONS: str(slots + 3), "spark.ui.enabled": "false"})
+        assert pinned.conf.get(SHUFFLE_PARTITIONS) == str(slots + 3)
+        sized = get_session("tests", extra_conf={"spark.ui.enabled": "false"})
+        assert sized.conf.get(SHUFFLE_PARTITIONS) == str(slots)
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, prev)
+
+
+def test_load_table_writes_no_session_conf(spark, sf_smoke_dir, monkeypatch):
+    from pyspark.sql.conf import RuntimeConfig
+    writes = []
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, k, v: writes.append((k, v)))
+    monkeypatch.setattr(RuntimeConfig, "unset",
+                        lambda self, k: writes.append((k, None)))
+    for name in TABLE_NAMES:
+        for fanout in (False, True):
+            load_table(spark, sf_smoke_dir, name, fanout=fanout).schema
+    assert writes == []
+
+
+def test_events_nanos_and_micros_normalize_identically(spark, sf_smoke_dir,
+                                                       tmp_path):
+    """events.ts has shipped as TIMESTAMP(NANOS) and as TIMESTAMP(MICROS);
+    both raw forms of the same rows must load as the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw = pq.read_table(os.path.join(sf_smoke_dir, "events.parquet"))
+    ts_i = raw.schema.get_field_index("ts")
+    sf = {}
+    for unit, spark_type in (("ns", "bigint"), ("us", "timestamp_ntz")):
+        sf[unit] = tmp_path / f"sf_{unit}"
+        sf[unit].mkdir()
+        path = str(sf[unit] / "events.parquet")
+        pq.write_table(raw.set_column(ts_i, "ts",
+                                      raw["ts"].cast(pa.timestamp(unit))),
+                       path)
+        # each variant exercises its own raw read path
+        assert dict(spark.read.parquet(path).dtypes)["ts"] == spark_type
+
+    def rows(unit):
+        df = load_table(spark, str(sf[unit]), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        return sorted(tuple(r) for r in df.collect())
+
+    from_ns = rows("ns")
+    assert from_ns == rows("us")
+    assert len(from_ns) > 100
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_free_checkpoint_drops_superseded_entry(spark, monkeypatch):
+    """Canary: freeing round k-1's localCheckpoint once round k has
+    materialized from it removes exactly k-1's persistent-RDD entry.
+    Fails if Spark internals drift so that the private-API path stops
+    releasing anything (free_checkpoint itself stays silent then)."""
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    before = _persistent_ids(spark)
+    prev = truncate_lineage(spark.range(1000).selectExpr("id", "id % 7 AS k"))
+    prev_ids = _persistent_ids(spark) - before
+    assert len(prev_ids) == 1
+    cur = truncate_lineage(prev.groupBy("k").count())
+    cur_ids = _persistent_ids(spark) - before - prev_ids
+    assert len(cur_ids) == 1
+    free_checkpoint(prev)
+    assert _persistent_ids(spark) - before == cur_ids
+    assert cur.count() == 7  # the live round stays readable
+    free_checkpoint(cur)
+    assert _persistent_ids(spark) - before == set()
+
+
+def test_free_checkpoint_propagates_unexpected_errors():
+    class Broken:
+        @property
+        def _jdf(self):
+            raise RuntimeError("not a JVM error")
+
+    with pytest.raises(RuntimeError, match="not a JVM error"):
+        free_checkpoint(Broken())

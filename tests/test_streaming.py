@@ -714,3 +714,53 @@ def test_stream_quarantine_boundary_is_session_tz_invariant(
     assert kept_ids("UTC") == [2, 3, 5, 6]
     assert kept_ids("America/New_York") == [2, 3, 5, 6]
     assert kept_ids("Asia/Kathmandu") == [2, 3, 5, 6]  # +05:45 offset
+
+
+def _drain_with_shuffle_partitions(spark, stream_df, name, n, output_mode):
+    """Drain ``stream_df`` with ``spark.sql.shuffle.partitions`` = n set
+    only around start() — the query fixes its state-store partition
+    count there — and return (sorted emitted rows, the state partition
+    counts its progress reports)."""
+    import json
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        q = (stream_df.writeStream.format("memory").queryName(name)
+             .outputMode(output_mode).trigger(availableNow=True).start())
+    finally:
+        spark.conf.set(key, prev)
+    q.awaitTermination()
+    state_parts = {op["numShufflePartitions"]
+                   for p in q.recentProgress
+                   for op in json.loads(p.json)["stateOperators"]}
+    rows = sorted(tuple(r) for r in spark.table(name).collect())
+    spark.catalog.dropTempView(name)
+    return rows, state_parts
+
+
+@pytest.mark.parametrize("op_name,output_mode", [
+    ("stream_tumbling_counts", "append"),
+    ("stream_session_window", "append"),
+    ("stream_running_user_stats", "update"),
+])
+def test_stream_results_invariant_to_shuffle_partitions(spark, events_dir,
+                                                        op_name, output_mode):
+    """Metamorphic: the state-store partition count a stateful query
+    starts with (the session's shuffle partitions, sized to task slots
+    by session.get_session) moves rows between partitions and nothing
+    else — the rows emitted at 1, 2 and 32 partitions are exactly
+    equal (one file per trigger, so state carries across
+    micro-batches)."""
+    from mapreduce_4sl08_spark.streaming import ops
+    operator = getattr(ops, op_name)
+    results = {}
+    for n in (1, 2, 32):
+        stream = operator(events_stream(spark, events_dir,
+                                       max_files_per_trigger=1))
+        rows, state_parts = _drain_with_shuffle_partitions(
+            spark, stream, f"t_parts_{op_name}_{n}", n, output_mode)
+        assert state_parts == {n}, (n, state_parts)
+        results[n] = rows
+    assert len(results[1]) > 0
+    assert results[1] == results[2] == results[32]

@@ -366,6 +366,9 @@ def main() -> int:
         return 2
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.ui.enabled", "false")
+             # a TIMESTAMP(NANOS) events.parquet needs this;
+             # session.ENGINE_CONF sets it for engine-built sessions
+             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
              .config("spark.sql.shuffle.partitions", "4")
              .getOrCreate())
     ok = mismatch = crash_s = crash_o = 0

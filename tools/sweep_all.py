@@ -6,11 +6,12 @@ repeatable command):
     python tools/sweep_all.py [sf_dir]
 
 Simulates the external driver exactly: a plain SparkSession with
-DRIVER-LIKE settings (local[4], default 200 shuffle partitions, no
-pytest fixtures, no engine tuning beyond what queries() itself
-applies), every `queries()` entry hash-compared against its
-`oracle_sql()` twin in DuckDB via tests.oracle.compare_frames
-(driver-strict: dtypes, tz, column order by name, value hash).
+DRIVER-LIKE settings (local[4], no pytest fixtures, no engine tuning
+beyond what queries() itself applies — which includes sizing shuffle
+partitions to the session's 4 task slots), every `queries()` entry
+hash-compared against its `oracle_sql()` twin in DuckDB via
+tests.oracle.compare_frames (driver-strict: dtypes, tz, column order by
+name, value hash).
 
 Exit 0 = every query green; exit 1 = any mismatch, with a per-query
 FAIL line and the exception. ~2-3 min for the full registry at sf0.01
