@@ -86,7 +86,10 @@ def _reset_memos(spark) -> None:
     heavy queries memoize shared persisted indexes per (applicationId,
     sf_dir) — shingle index, verified near-dup pairs, CC labels,
     co-purchase edges. Without the reset, passes 2+ would time the
-    memo-hit path (near-free) instead of the query."""
+    memo-hit path (near-free) instead of the query. The table schema
+    cache (sources/tables.py) survives the reset on purpose: it holds
+    no session state, only each parquet file's schema per file stamp,
+    and a real deployment infers it once per file, not once per query."""
     from mapreduce_4sl08_spark.plans import all_session_memos
     for memo in all_session_memos().values():
         memo.clear()

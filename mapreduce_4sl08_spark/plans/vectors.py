@@ -23,6 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql.functions import broadcast
 
 from ..functions import arrow_dot, cosine, dot, l2_norm
+from ..sources.tables import file_stamp
 from .base import EMB_DIM, QuerySpec, SessionMemo, t, vec_finite_sql, vecs
 
 _N_PROBES = 5   # vec_id < 5 are the probe vectors
@@ -224,49 +225,16 @@ def lsh_params(n: int) -> tuple[int, int]:
     return adaptive_band_width(n), lsh_tables(n)
 
 
-#: (sf_dir, fixture stamp) -> footer row count. The stamp (mtime_ns +
-#: size of embeddings.parquet, or the directory's own stat for a
-#: part-file dir) invalidates the cache if a fixture is ever rebuilt
-#: in-place (ADVICE r15 item 4: a stale count silently yields a wrong
-#: (w, L) while the oracle derives fresh ones from COUNT(*) — a
-#: confusing cross-engine mismatch, now impossible for the single-file
-#: fixture shape; make_scale_fixture additionally refuses to overwrite
-#: an existing embeddings output, covering the same-named-part-file
-#: dir case the stat can't see). One os.stat per call vs the footer
-#: walk it avoids (thousands of metadata opens per lsh_corpus_bands
-#: call on a directory-shaped 100 TB corpus).
+#: (sf_dir, file stamp) -> footer row count. The stamp
+#: (sources.tables.file_stamp of embeddings.parquet) invalidates the
+#: cache if a fixture is ever rebuilt in-place (ADVICE r15 item 4: a
+#: stale count silently yields a wrong (w, L) while the oracle derives
+#: fresh ones from COUNT(*) — a confusing cross-engine mismatch, now
+#: impossible; make_scale_fixture additionally refuses to overwrite an
+#: existing embeddings output). One stat (a walk for a part-file dir)
+#: per call vs the footer walk it avoids (thousands of metadata opens
+#: per lsh_corpus_bands call on a directory-shaped 100 TB corpus).
 _VEC_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _fixture_stamp(sf_dir: str) -> tuple:
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-    except OSError:
-        return ("missing",)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    # Directory of part files (ADVICE r16 item 3): the dir's own stat
-    # only moves on entry add/remove — an EXTERNAL writer rebuilding
-    # the same-named part files in place would not touch it, and the
-    # footer-count cache would serve a stale count (=> stale (w, L)
-    # while the oracle counts fresh). Fold every part file's
-    # (name, mtime_ns, size) into the stamp — one scandir per call,
-    # still far cheaper than the footer walk this cache avoids.
-    # walk, not a flat scandir: partition-column layouts nest part
-    # files, and the stamp must cover exactly the files
-    # _read_vec_count reads
-    parts = []
-    try:
-        for root, _dirs, files in os.walk(path):
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    pst = os.stat(os.path.join(root, f))
-                    parts.append((os.path.join(os.path.relpath(root, path), f),
-                                  pst.st_mtime_ns, pst.st_size))
-    except OSError:
-        return ("missing",)
-    return (st.st_mtime_ns, tuple(sorted(parts)))
 
 
 def corpus_vec_count(sf_dir: str) -> int:
@@ -275,7 +243,7 @@ def corpus_vec_count(sf_dir: str) -> int:
     stays honest: this is the same metadata a NumRows pushdown serves).
     Handles both a single file and a directory of part files; cached
     per (sf_dir, file stamp) so an in-place fixture rebuild is seen."""
-    key = (sf_dir, _fixture_stamp(sf_dir))
+    key = (sf_dir, file_stamp(os.path.join(sf_dir, "embeddings.parquet")))
     cached = _VEC_COUNT_CACHE.get(key)
     if cached is not None:
         return cached
