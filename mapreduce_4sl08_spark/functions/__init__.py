@@ -2,11 +2,11 @@
 
 The reference's entire scalar-function surface is two string expressions
 (P1 tokenize, P2 normalize — /root/reference/src/WorkerNode.java:43-46).
-This module pins their exact Java-regex semantics (Spark's regexp functions
-run Java regex on the JVM, so parity is by construction) and adds the
-vector / text primitives the extended operators build on. Everything here
-is built-in-function composition — JVM-side, whole-stage-codegen friendly;
-no Python UDFs.
+This module pins P1's Java-regex splitter (Spark's regexp functions run
+Java regex on the JVM, so parity is by construction; P2 runs fused with
+it in operators/wordcount.py) and adds the vector / text primitives the
+extended operators build on. Everything here is built-in-function
+composition — JVM-side, whole-stage-codegen friendly; no Python UDFs.
 """
 
 from __future__ import annotations
@@ -20,26 +20,6 @@ from pyspark.sql import functions as F
 
 #: Java `\s+` token splitter (P1, WorkerNode.java:43)
 TOKEN_SPLIT_RE = r"\s+"
-#: Java `\W` — ASCII word chars only; strips accents/punct (P2, WorkerNode.java:45)
-NON_WORD_RE = r"\W"
-
-
-def tokenize(col) -> Column:
-    """P1: trim + split on whitespace runs → array<string>."""
-    return F.split(F.trim(F.col(col) if isinstance(col, str) else col), TOKEN_SPLIT_RE)
-
-
-def normalize_word(col) -> Column:
-    """P2: lowercase then delete all Java-`\\W` chars."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.lower(F.regexp_replace(c, NON_WORD_RE, ""))
-
-
-def words(col) -> Column:
-    """P1+P2 fused: array of normalized words (empties NOT yet filtered —
-    apply P3 ``!= ''`` after explode so the filter runs post-normalize,
-    matching WorkerNode.java:46)."""
-    return F.transform(tokenize(col), normalize_word)
 
 
 # --- vector primitives (similarity search) -------------------------------

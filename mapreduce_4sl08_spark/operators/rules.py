@@ -24,14 +24,3 @@ def apply_rules(df: DataFrame, rules: dict[str, Column],
     cleaned = F.array_sort(F.filter(tagged, lambda x: x.isNotNull()))
     return df.withColumn(out_col, cleaned)
 
-
-def rule_summary(df_with_rules: DataFrame,
-                 out_col: str = "failed_rules") -> DataFrame:
-    """Per-rule failure counts (exploded, so a row failing k rules counts
-    toward each of the k)."""
-    return (
-        df_with_rules
-        .select(F.explode_outer(out_col).alias("rule"))
-        .groupBy("rule")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

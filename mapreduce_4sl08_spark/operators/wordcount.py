@@ -5,8 +5,8 @@ Maps every data-plane operator of /root/reference (SURVEY §2.1):
   S1/S2  scan+split   spark.read.text (line-aligned splits; the reference's
                       mid-word char splits, MasterNode.java:59-78, are a
                       documented deviation — SURVEY §7.1)
-  P1     tokenize     split(trim(value), '\\s+')       WorkerNode.java:43
-  P2     normalize    lower(regexp_replace(_, '\\W', ''))  WorkerNode.java:45
+  P1     tokenize     split(_, '\\s+')                  WorkerNode.java:43
+  P2     normalize    lowercase, then delete Java-'\\W'  WorkerNode.java:45
   P3     filter       word != ''                        WorkerNode.java:46
   P4+X1+A1  count     groupBy('word').count() — Spark adds the map-side
                       partial agg the reference lacks (SURVEY §4.3)
@@ -18,22 +18,32 @@ Maps every data-plane operator of /root/reference (SURVEY §2.1):
 Counts are LongType (the reference's int overflows at 2^31 — wrong at the
 100 TB design point). At scale this plan is two shuffles, both required by
 the semantics; AQE right-sizes both.
+
+P1-P3 run once per line, not per token: lowercase, delete every char
+that is neither '\\w' nor '\\s' (so token boundaries stay put, and a token
+left empty only merges two separators), split on '\\s+'. Lowercasing
+first is the reference's order; it keeps the ASCII letter that U+212A
+(KELVIN SIGN) and U+0130 lowercase to, which deleting first would lose.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import NON_WORD_RE, TOKEN_SPLIT_RE
+from ..functions import TOKEN_SPLIT_RE
+
+#: Java chars that are neither `\w` nor `\s` (both ASCII classes): what
+#: P2 deletes, with the P1 separators kept in place
+_NON_WORD_NON_SPACE_RE = r"[^\w\s]"
 
 
 def words_from_lines(lines: DataFrame, col: str = "value") -> DataFrame:
     """P1-P3 over a one-line-per-row DataFrame → single `word` column."""
+    norm = F.regexp_replace(F.lower(F.col(col)), _NON_WORD_NON_SPACE_RE, "")
     return (
         lines
-        .select(F.explode(F.split(F.trim(F.col(col)), TOKEN_SPLIT_RE)).alias("token"))
-        .select(F.lower(F.regexp_replace("token", NON_WORD_RE, "")).alias("word"))
+        .select(F.explode(F.split(norm, TOKEN_SPLIT_RE)).alias("word"))
         .filter(F.col("word") != "")
     )
 

@@ -878,7 +878,7 @@ ORDER BY l_returnflag
 def text_char_trigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-lang top-5 character trigrams of the normalized text — the
     classic language-profile n-gram statistic, via char_ngrams."""
-    from ..functions import char_ngrams, normalize_word
+    from ..functions import char_ngrams
     d = t(spark, sf_dir, "documents", fanout=True)
     tri = (
         d.select("lang", F.explode(

@@ -102,6 +102,9 @@ _MODULE_SPECS = [
 # End-of-round ritual: append the new round's names to the JSON, then
 # rewrite this tuple for the next round's changed plans.
 _ROUND_PRIORITY: tuple[str, ...] = (
+    # Plan and oracle changed: the word count lowercases, then deletes
+    # `\W`, once per line (operators/wordcount.words_from_lines).
+    "wordcount_documents",
     # round 22 (optimization round 2; VERDICT r21 "Next round" list).
     # ORDER IS THE DRIVER'S PROOF BUDGET ALLOCATION (see _order_key).
     # Block 1 — the 29 rows whose PLAN changed this round: fanout=True

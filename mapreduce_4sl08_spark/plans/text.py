@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..functions import NON_WORD_RE, TOKEN_SPLIT_RE, word_shingles
+from ..functions import TOKEN_SPLIT_RE, word_shingles
 from ..operators.wordcount import word_count
 from ..session import free_checkpoint, truncate_lineage
 from .base import QuerySpec, SessionMemo, t
@@ -37,7 +37,7 @@ def wordcount_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 WORDCOUNT_SQL = r"""
 WITH toks AS (
-  SELECT lower(regexp_replace(tok, '\W', '', 'g')) AS word
+  SELECT regexp_replace(lower(tok), '\W', '', 'g') AS word
   FROM documents, UNNEST(regexp_split_to_array(trim(text, ' '), '[ \t\n\x0b\f\r]+')) AS u(tok)
 )
 SELECT word, COUNT(*) AS count

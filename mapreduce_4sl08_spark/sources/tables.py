@@ -133,10 +133,11 @@ def _ts_window_ns(bound: str) -> int:
 #
 # Catalyst pushes caller filters and projections below the repartition,
 # so PushedFilters/ReadSchema at the parquet scan are unchanged and the
-# exchange carries post-filter, post-projection bytes only (verified in
-# plans/r21/*_after.txt). Value identity: a hash exchange only MOVES
-# rows, and every registry query orders its output by a unique key —
-# but row order does feed the combine order of floating-point
+# exchange carries post-filter, post-projection bytes only (pinned by
+# tests/test_scan_fanout.py::test_fanout_keeps_pushed_filters_and_read_schema).
+# Value identity: a hash exchange only MOVES rows, and every registry
+# query orders its output by a unique key — but row order does feed
+# the combine order of floating-point
 # aggregates downstream, so for double SUM/AVG consumers the identity
 # is covered empirically by the oracle comparison (full 168/168 sweep
 # at sf0.01 with fan-out active on every fact table,

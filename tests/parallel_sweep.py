@@ -60,6 +60,14 @@ def sweep(names: Iterable[str],
         return dict(zip(names, pool.map(run, names)))
 
 
+def selected(request, test: str) -> list[str]:
+    """The ids of ``test``'s parametrized items, in the module that
+    requests the fixture, that this session runs (after ``-k``/``-m``
+    deselection), so a module-scoped sweep checks only those."""
+    return [item.callspec.id for item in request.session.items
+            if item.module is request.module and item.originalname == test]
+
+
 def reraise(results: dict[str, BaseException | None], name: str) -> None:
     """The per-test body: re-raise this query's stored failure, if any."""
     err = results[name]

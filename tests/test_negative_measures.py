@@ -26,7 +26,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 from tools.null_fixtures import KEY_COLS, TABLES
 
 
@@ -58,7 +58,7 @@ def duck_sfneg(sfneg_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sfneg_dir, duck_sfneg):
+def _swept(spark, sfneg_dir, duck_sfneg, request):
     duck = cursor_per_thread(duck_sfneg)
 
     def check(name):
@@ -70,7 +70,7 @@ def _swept(spark, sfneg_dir, duck_sfneg):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_negative_measures"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

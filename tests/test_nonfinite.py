@@ -38,7 +38,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 from tools.null_fixtures import TABLES, build_nonfinite
 
 
@@ -58,7 +58,7 @@ def duck_sfnonfinite(sfnonfinite_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sfnonfinite_dir, duck_sfnonfinite):
+def _swept(spark, sfnonfinite_dir, duck_sfnonfinite, request):
     duck = cursor_per_thread(duck_sfnonfinite)
 
     def check(name):
@@ -70,7 +70,7 @@ def _swept(spark, sfnonfinite_dir, duck_sfnonfinite):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_nonfinite"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

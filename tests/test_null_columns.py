@@ -46,7 +46,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 from tools.null_fixtures import TABLES, build_same_row, build_staggered
 
 
@@ -81,7 +81,7 @@ def duck_sfnull_staggered(sfnull_staggered_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept_same_row(spark, sfnull_dir, duck_sfnull):
+def _swept_same_row(spark, sfnull_dir, duck_sfnull, request):
     duck = cursor_per_thread(duck_sfnull)
 
     def check(name):
@@ -93,7 +93,7 @@ def _swept_same_row(spark, sfnull_dir, duck_sfnull):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_handles_null_columns"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -102,7 +102,7 @@ def test_query_handles_null_columns(_swept_same_row, name):
 
 
 @pytest.fixture(scope="module")
-def _swept_staggered(spark, sfnull_staggered_dir, duck_sfnull_staggered):
+def _swept_staggered(spark, sfnull_staggered_dir, duck_sfnull_staggered, request):
     duck = cursor_per_thread(duck_sfnull_staggered)
 
     def check(name):
@@ -114,7 +114,7 @@ def _swept_staggered(spark, sfnull_staggered_dir, duck_sfnull_staggered):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_staggered_nulls"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -23,7 +23,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
@@ -49,7 +49,7 @@ def duck_sf1row(sf1row_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sf1row_dir, duck_sf1row):
+def _swept(spark, sf1row_dir, duck_sf1row, request):
     duck = cursor_per_thread(duck_sf1row)
 
     def check(name):
@@ -61,7 +61,7 @@ def _swept(spark, sf1row_dir, duck_sf1row):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_one_row_tables"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -6,7 +6,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 
 from .oracle import compare_frames, duckdb_connection
-from .parallel_sweep import cursor_per_thread, reraise, sweep
+from .parallel_sweep import cursor_per_thread, reraise, selected, sweep
 
 ORACLE_SPECS = [s for s in QUERIES.values() if s.oracle]
 # Every registry query must carry an oracle — rows-only entries were
@@ -24,7 +24,7 @@ def con(sf_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, con, sf_dir):
+def _swept(spark, con, sf_dir, request):
     duck = cursor_per_thread(con)
 
     def check(name):
@@ -32,7 +32,7 @@ def _swept(spark, con, sf_dir):
         compare_frames(spec.fn(spark, sf_dir).toPandas(),
                        duck().execute(spec.oracle).fetchdf(), name)
 
-    return sweep([s.name for s in ORACLE_SPECS], check)
+    return sweep(selected(request, "test_oracle_match"), check)
 
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=lambda s: s.name)

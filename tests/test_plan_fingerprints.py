@@ -81,8 +81,8 @@ def test_fingerprint_snapshot_covers_exactly_the_registry():
 
 
 @pytest.fixture(scope="module")
-def _swept(spark):
-    from tests.parallel_sweep import sweep
+def _swept(spark, request):
+    from tests.parallel_sweep import selected, sweep
 
     def check(name):
         assert name in _SNAPSHOT, (
@@ -100,7 +100,7 @@ def _swept(spark):
             f"tuple in plans/registry.py, then regenerate the snapshot "
             f"with python tools/gen_plan_fingerprints.py")
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_plan_drift_requires_priority_reproof"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES), ids=str)

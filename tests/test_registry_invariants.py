@@ -25,8 +25,8 @@ SCALAR_AGG_QUERIES = {
 
 
 @pytest.fixture(scope="module")
-def _no_rowpy_swept(spark):
-    from tests.parallel_sweep import sweep
+def _no_rowpy_swept(spark, request):
+    from tests.parallel_sweep import selected, sweep
 
     def check(name):
         df = QUERIES[name].fn(spark, SF_SMOKE)
@@ -42,7 +42,7 @@ def _no_rowpy_swept(spark):
             f"{name} plans a CartesianProduct — broadcast the small "
             f"side or add a join key:\n{plan[:600]}")
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_no_row_at_a_time_python"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES), ids=str)
@@ -353,8 +353,8 @@ def unbounded_global_windows(df) -> list[str]:
 
 
 @pytest.fixture(scope="module")
-def _global_window_swept(spark):
-    from tests.parallel_sweep import sweep
+def _global_window_swept(spark, request):
+    from tests.parallel_sweep import selected, sweep
 
     def check(name):
         df = QUERIES[name].fn(spark, SF_SMOKE)
@@ -364,7 +364,7 @@ def _global_window_swept(spark):
             f"UNBOUNDED input — put a limit(k) or aggregate below it, "
             f"or partition the window:\n" + "\n".join(bad))
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_global_window_sits_above_bounded_input"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES), ids=str)

@@ -6,9 +6,13 @@
 2. ``sources.tables.load_table`` writes no session conf (the
    TIMESTAMP(NANOS) read conf is an engine default), and the NANOS and
    MICROS events variants normalize to the same rows;
-3. ``free_checkpoint`` still releases a superseded localCheckpoint
-   through its private-API path (a canary for Spark-internal drift),
-   and lets errors other than Py4J/attribute ones propagate.
+3. ``truncate_lineage(eager=False)`` cuts the plan's lineage at wrap
+   time and keeps its values;
+4. ``free_checkpoint`` still releases a superseded localCheckpoint
+   through its private-API path (a canary for Spark-internal drift), is
+   a silent no-op on a frame without one, and lets errors other than
+   Py4J/attribute ones propagate; the connected-components loop that
+   frees each round's labels keeps a bounded number resident.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from mapreduce_4sl08_spark.session import (
     ENGINE_CONF, SHUFFLE_PARTITIONS, apply_engine_conf, free_checkpoint,
@@ -95,6 +100,19 @@ def test_events_nanos_and_micros_normalize_identically(spark, sf_smoke_dir,
         assert rows(unit) == from_ns
 
 
+def test_lazy_truncate_lineage_cuts_plan_and_keeps_values(spark):
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    cut = truncate_lineage(df, eager=False)
+    # lineage cut at wrap time: the logical plan is an RDD scan, not
+    # the original Range->Project tree
+    assert "LogicalRDD" in cut._jdf.queryExecution().logical().toString()
+    # the convergence-check pattern: the first action both materializes
+    # the checkpoint and computes the aggregate
+    assert cut.agg(F.sum("v")).collect()[0][0] == 9900
+    assert sorted(map(tuple, cut.collect())) == \
+        sorted(map(tuple, df.collect()))
+
+
 def _persistent_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs())
 
@@ -127,3 +145,32 @@ def test_free_checkpoint_propagates_unexpected_errors():
 
     with pytest.raises(RuntimeError, match="not a JVM error"):
         free_checkpoint(Broken())
+
+
+def test_free_checkpoint_noop_on_plain_frame(spark):
+    # a non-checkpoint plan has no LogicalRDD -> the helper must be a
+    # silent no-op (best-effort contract), never an exception
+    df = spark.range(10).selectExpr("id AS x")
+    free_checkpoint(df)
+    assert df.count() == 10  # frame untouched
+
+
+def test_cc_loop_checkpoint_residency_bounded(spark):
+    """A chain graph forces one propagation round per hop (diameter
+    rounds), so without the per-round free the loop would leave one
+    label checkpoint PER ROUND resident. The gate allows the steady
+    state: edges + the live (last) labels checkpoint."""
+    from mapreduce_4sl08_spark.plans.text import _min_label_propagation
+    n = 9  # chain 0-1-2-...-9: diameter 9 -> ~9 propagation rounds
+    rows = [(i, i + 1) for i in range(n)] + [(i + 1, i) for i in range(n)]
+    edges = truncate_lineage(
+        spark.createDataFrame(rows, ["src", "dst"]), eager=False)
+    base = len(_persistent_ids(spark))
+    labels = _min_label_propagation(edges)
+    got = {r.doc_id: r.component for r in labels.collect()}
+    assert got == {i: 0 for i in range(n + 1)}  # one component, min id 0
+    # residency: the returned labels checkpoint (1) — NOT one per round.
+    # (edges was registered before `base` was read; transient query
+    # frames may add a stray entry, hence <= 2 rather than == 1.)
+    resident = len(_persistent_ids(spark)) - base
+    assert resident <= 2, f"label checkpoints accumulated: {resident}"

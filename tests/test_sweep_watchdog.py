@@ -1,14 +1,18 @@
-"""Unit pins for the sweep watchdog (tools/sweep_watchdog, r20): the
-harness guard that turns a super-linear plan/oracle into a named FAIL
-line instead of a stalled round. No Spark/DuckDB here — the engine
-cancel hooks were probed live (duckdb InterruptException + connection
-reuse; Spark cancelJobGroup) when the watchdog shipped; these pins keep
-the control flow honest."""
+"""Unit pins for the sweep harness: the sweep watchdog
+(tools/sweep_watchdog, r20), the guard that turns a super-linear
+plan/oracle into a named FAIL line instead of a stalled round, and
+tests/parallel_sweep, which runs a module's checks on a thread pool and
+re-raises each outcome in its own test. No Spark/DuckDB here — the
+engine cancel hooks were probed live (duckdb InterruptException +
+connection reuse; Spark cancelJobGroup) when the watchdog shipped; these
+pins keep the control flow honest."""
 import threading
 import time
+from types import SimpleNamespace as NS
 
 import pytest
 
+from tests.parallel_sweep import reraise, selected, sweep
 from tools.sweep_watchdog import budget_seconds, timeboxed
 
 
@@ -48,3 +52,31 @@ def test_budget_env_default(monkeypatch):
     assert budget_seconds() == 600.0
     monkeypatch.setenv("SWEEP_QUERY_TIMEOUT", "42.5")
     assert budget_seconds() == 42.5
+
+
+def test_parallel_sweep_outcomes_exact():
+    class Boom(AssertionError):
+        pass
+
+    def check(name):
+        if name == "bad":
+            raise Boom(f"{name} exploded")
+
+    results = sweep(["ok1", "bad", "ok2"], check)
+    assert set(results) == {"ok1", "bad", "ok2"}
+    assert results["ok1"] is None and results["ok2"] is None
+    reraise(results, "ok1")  # passing item re-raises nothing
+    with pytest.raises(Boom, match="bad exploded"):
+        reraise(results, "bad")
+
+
+def test_selected_is_the_collected_params_of_one_test_in_one_module():
+    mod, other = object(), object()
+
+    def item(module, test, param):
+        return NS(module=module, originalname=test, callspec=NS(id=param))
+
+    request = NS(module=mod, session=NS(items=[
+        item(mod, "test_a", "q1"), item(mod, "test_b", "q2"),
+        item(other, "test_a", "q3"), item(mod, "test_a", "q4")]))
+    assert selected(request, "test_a") == ["q1", "q4"]

@@ -31,7 +31,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 from tools.extremes_census import build_ts_wide
 from tools.null_fixtures import TABLES
 
@@ -116,7 +116,7 @@ def test_quarantine_window_edges_are_inclusive(spark, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sftswide_dir, duck_sftswide):
+def _swept(spark, sftswide_dir, duck_sftswide, request):
     duck = cursor_per_thread(duck_sftswide)
 
     def check(name):
@@ -128,7 +128,7 @@ def _swept(spark, sftswide_dir, duck_sftswide):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_out_of_window_ts"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -25,7 +25,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
@@ -88,7 +88,7 @@ def duck_sfuni(sfuni_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sfuni_dir, duck_sfuni):
+def _swept(spark, sfuni_dir, duck_sfuni, request):
     duck = cursor_per_thread(duck_sfuni)
 
     def check(name):
@@ -100,7 +100,7 @@ def _swept(spark, sfuni_dir, duck_sfuni):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_unicode_text"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -26,7 +26,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
@@ -85,7 +85,7 @@ def duck_sffuzz(sffuzz_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sffuzz_dir, duck_sffuzz):
+def _swept(spark, sffuzz_dir, duck_sffuzz, request):
     duck = cursor_per_thread(duck_sffuzz)
 
     def check(name):
@@ -97,7 +97,7 @@ def _swept(spark, sffuzz_dir, duck_sffuzz):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_whitespace_fuzz"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

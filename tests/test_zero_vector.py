@@ -35,7 +35,7 @@ import pytest
 from mapreduce_4sl08_spark.plans import QUERIES
 from tests.conftest import SF_SMOKE as SRC
 from tests.oracle import compare_frames
-from tests.parallel_sweep import cursor_per_thread, reraise, sweep
+from tests.parallel_sweep import cursor_per_thread, reraise, selected, sweep
 from tools.null_fixtures import TABLES
 
 
@@ -63,7 +63,7 @@ def duck_sfzerovec(sfzerovec_dir):
 
 
 @pytest.fixture(scope="module")
-def _swept(spark, sfzerovec_dir, duck_sfzerovec):
+def _swept(spark, sfzerovec_dir, duck_sfzerovec, request):
     duck = cursor_per_thread(duck_sfzerovec)
 
     def check(name):
@@ -75,7 +75,7 @@ def _swept(spark, sfzerovec_dir, duck_sfzerovec):
         oracle_pdf = duck().execute(spec.oracle).fetchdf()
         compare_frames(spark_pdf, oracle_pdf, name)
 
-    return sweep(sorted(QUERIES), check)
+    return sweep(selected(request, "test_query_matches_oracle_on_zero_vector"), check)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
