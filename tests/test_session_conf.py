@@ -117,6 +117,14 @@ def _persistent_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def test_free_checkpoint_releases_blocks(spark):
+    base = len(_persistent_ids(spark))
+    ck = truncate_lineage(spark.range(1000).selectExpr("id", "id * 2 AS v"))
+    assert len(_persistent_ids(spark)) == base + 1
+    free_checkpoint(ck)
+    assert len(_persistent_ids(spark)) == base
+
+
 def test_free_checkpoint_drops_superseded_entry(spark, monkeypatch):
     """Canary: freeing round k-1's localCheckpoint once round k has
     materialized from it removes exactly k-1's persistent-RDD entry.
