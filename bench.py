@@ -48,7 +48,7 @@ HEADLINE = [
     "simhash_dedup",              # banded SimHash near-dup
     "knn_bruteforce_cosine",      # vector similarity
     "multimodal_decode_stub",     # Arrow mapInPandas plumbing
-    "events_user_features",       # applyInPandas grouped map
+    "events_user_features",       # per-user lag window + aggregates
     "pandas_udf_norms",           # Arrow pandas-UDF scalar path
     "q13_order_count_histogram",  # double aggregation
     "dedup_connected_components", # iterative label propagation

@@ -1,7 +1,8 @@
-"""Grouped-map operators: applyInPandas — the escape hatch for per-group
-logic the built-in operators can't express (custom per-entity feature
-extraction, model scoring, sequence features). Arrow-batched; each group
-becomes one pandas DataFrame on an executor.
+"""Grouped-map operators: cogrouped applyInPandas — the escape hatch for
+per-group logic the built-in operators can't express (here the as-of
+merge; per-user sequence features are built-ins, see
+plans/events.user_sequence_features). Arrow-batched; each group becomes
+one pandas DataFrame on an executor.
 
 At 100 TB the contract that matters: groups must fit in executor memory
 (they are materialized per group) — callers pick group keys with bounded
@@ -11,120 +12,7 @@ cardinality-per-key, or pre-reduce with built-ins first.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType, LongType, StructField, StructType, TimestampType,
-)
-
-#: Spans are returned as EXACT INTEGER MICROSECONDS, not float seconds:
-#: the earlier float path (int64 ns / 1e9, subtract two ~1.7e9 doubles)
-#: carried ~1e-7 s of error AND left the 4-decimal rounding to each
-#: engine's tie semantics — at sf0.1 volume, 8 of ~2000 users landed
-#: exactly on a ...50 µs round4 tie where Spark (decimal HALF_UP) and
-#: DuckDB (binary) disagree (caught by the r8 sf0.1 sweep probe; green
-#: at the driver's sf0.01 only by data luck). Downstream converts to
-#: 4-decimal seconds in exact integer arithmetic; see plans/events.py.
-USER_FEATURES_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("n_events", LongType()),
-    StructField("span_us", LongType()),
-    StructField("max_value_delta", DoubleType()),
-])
-
-
-def user_session_features(events: DataFrame) -> DataFrame:
-    """Per-user sequential features that need the full ordered event
-    sequence (gaps, deltas) — the canonical applyInPandas shape."""
-
-    def features(pdf):
-        import pandas as pd
-        pdf = pdf.sort_values(["ts", "event_id"])
-        # explicit µs unit: Arrow may hand pandas datetime64[ns] or [us]
-        # depending on version — pin the unit before taking int64.
-        # Span over LIVE timestamps only (r16 staggered-null find):
-        # .astype("int64") turns NaT into INT64_MIN, so one null-ts row
-        # in a live group made span ~9.2e18 µs and overflowed the
-        # downstream ANSI arithmetic — SQL MAX/MIN skip NULLs, and so
-        # does this now.
-        ts = pdf["ts"].astype("datetime64[us]")
-        live = ts.dropna().astype("int64")
-        n = len(pdf)
-        span_us = int(live.max() - live.min()) if len(live) > 1 else 0
-        deltas = pdf["value"].diff().abs().dropna()
-        return pd.DataFrame({
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_events": [n],
-            "span_us": [span_us],
-            "max_value_delta": [float(deltas.max()) if len(deltas) else 0.0],
-        })
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandas(features, USER_FEATURES_SCHEMA)
-    )
-
-
-def user_session_features_fast(events: DataFrame) -> DataFrame:
-    """Same result as ``user_session_features`` but via
-    repartition(key) + sortWithinPartitions + mapInPandas with a pandas
-    groupby inside the partition. applyInPandas ships ONE Arrow batch per
-    group — at millions of small groups the per-group round-trip
-    dominates; this shape ships whole partitions (one batch each) and
-    groups in-process, which is the 100 TB form of per-entity logic.
-    """
-
-    def features_partition(batches):
-        import pandas as pd
-
-        def one(pdf: pd.DataFrame) -> pd.DataFrame:
-            # fully vectorized: ONE partition-wide sort, then C-side
-            # groupby aggregations — the per-group Python loop this
-            # replaces (iterate groups, sort each, diff each) cost ~3×
-            # more at sf0.1 (1.0-1.2 s vs 0.37 s, measured interleaved
-            # r7) and scales with GROUP COUNT in interpreter steps; this
-            # scales in vectorized C. Arithmetic is identical per value
-            # (diff/abs/max are element-wise), so output is bit-equal —
-            # pinned by test_grouped_map_fast_equals_canonical.
-            pdf = pdf.sort_values(["user_id", "ts", "event_id"])
-            # NaT-aware span (r16 staggered-null find; see the
-            # canonical twin above): mask NaT to NaN so groupby
-            # max/min skip nulls exactly like SQL MAX/MIN. Live epoch
-            # µs (~1.7e15) is far below 2^53, exact in float64.
-            # .values.view('int64'), NOT .astype('int64') (ADVICE r16
-            # item 4): pandas is deprecating int-casting NaT (newer
-            # versions raise "Cannot convert NaT values to integer");
-            # the raw-buffer view reads the INT64_MIN sentinel without
-            # going through the cast, and .where() masks it before any
-            # arithmetic sees it.
-            ts = pdf["ts"].astype("datetime64[us]")
-            ts_us = pd.Series(ts.values.view("int64"),
-                              index=ts.index).where(ts.notna())
-            uid = pdf["user_id"].values
-            g = pdf.groupby("user_id", sort=False)
-            n = g.size()
-            gts = ts_us.groupby(uid, sort=False)
-            span_us = (gts.max() - gts.min()).where(n > 1, 0).fillna(0)
-            max_delta = g["value"].diff().abs().groupby(uid, sort=False).max()
-            return pd.DataFrame({
-                "user_id": n.index.astype("int64"),
-                "n_events": n.values.astype("int64"),
-                "span_us": span_us.values.astype("int64"),
-                "max_value_delta": max_delta.fillna(0.0).values.astype("float64"),
-            })
-
-        # a group never spans batches: the input is hash-partitioned on
-        # user_id, but one PARTITION can arrive as several Arrow batches,
-        # so buffer the partition before grouping
-        parts = [pdf for pdf in batches]
-        if parts:
-            yield one(pd.concat(parts, ignore_index=True))
-
-    return (
-        events.select("user_id", "event_id", "ts", "value")
-        .repartition("user_id")
-        .mapInPandas(features_partition, USER_FEATURES_SCHEMA)
-    )
-
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 ASOF_COGROUP_SCHEMA = StructType([
     StructField("event_id", LongType()),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from .base import (
-    QuerySpec, SessionMemo, cents, cents_sql, dollars, finite, finite_sql, t,
+    QuerySpec, cents, cents_sql, dollars, finite, finite_sql, session_memo, t,
 )
 from .warehouse import _share_e6_expr
 
@@ -509,44 +509,55 @@ ORDER BY day
 """
 
 
-# ------------------------------------------------------------ applyInPandas grouped map
+# ------------------------------------------------------------ per-user sequence features
+
+
+def user_sequence_features(events: DataFrame) -> DataFrame:
+    """(user_id, n_events, span_us, max_value_delta) per user of an
+    (user_id, event_id, ts, value) frame, in built-ins only: the value
+    delta is ``lag`` over the user's (ts, event_id) order, then one
+    per-user aggregate. ``span_us`` is EXACT integer microseconds (the
+    float-seconds path hit Spark-HALF_UP vs DuckDB-binary rounding ties
+    at sf0.1). LAG, MAX and MIN skip NULL as the oracle's do; a user
+    with no delta gets 0.0."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        events.select("user_id", "ts",
+                      F.abs(F.col("value") - F.lag("value").over(w))
+                      .alias("vdelta"))
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"),
+             (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts")))
+             .alias("span_us"),
+             F.coalesce(F.max("vdelta"), F.lit(0.0))
+             .alias("max_value_delta"))
+    )
 
 
 def events_user_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user sequence features via the grouped-map Arrow path —
-    custom per-entity logic the built-ins can't express. The oracle
-    recomputes the same closed-form features in SQL.
+    """Per-user sequence features (count, time span, mean gap, largest
+    value jump) — the same closed-form features the oracle computes in
+    SQL, via :func:`user_sequence_features`.
 
-    ``span_us`` arrives as EXACT integer microseconds (see
-    operators/grouped.py — the float-seconds path hit Spark-HALF_UP vs
-    DuckDB-binary rounding ties at sf0.1). The 4-decimal seconds
-    columns are derived here in exact BIGINT arithmetic: half-up at
-    100 µs granularity is ``(a + b/2) div b`` on non-negative ints, so
-    both engines compute the identical integer before the one final
-    exact-by-construction ``/ 10000.0``.
+    The 4-decimal seconds columns are derived from ``span_us`` in exact
+    BIGINT arithmetic: half-up at 100 µs granularity is
+    ``(a + b/2) div b`` on non-negative ints, so both engines compute
+    the identical integer before the one final exact-by-construction
+    ``/ 10000.0``.
 
     Null-ts contract (module note above): spans/gaps are over TIMED
     events only, excluded on BOTH sides — an all-null-ts user would
-    otherwise get span 0 from the NaT-masked grouped op but NULL from
-    the oracle's epoch(MAX(ts)), and a mixed user's lag-delta pairs
-    would hinge on NULLS FIRST/LAST. The grouped operators keep their
-    own NaT masking as defense in depth for direct callers.
+    otherwise get a NULL span, and a mixed user's lag-delta pairs would
+    hinge on NULLS FIRST/LAST.
 
-    Non-finite contract (r18): value runs through finite() before the
-    grouped op. pandas' skipna already treats NaN deltas as missing —
-    but DuckDB's MAX(NaN)=NaN and pandas propagates +Inf, so both
-    engines diverged per class; NULL is the one missing-value spelling
-    they all skip identically (all-missing → 0.0 via fillna/COALESCE)."""
-    from ..operators.grouped import user_session_features_fast
-    # NO fanout on the events read: re-tested at the 10x fixture per
-    # VERDICT r21 item 6 — neutral (2.29 vs 2.22 s interleaved,
-    # logs/ab_fanout_pandas_10x_r22.txt): applyInPandas already
-    # shuffles by user_id for the grouped map, so a pre-exchange
-    # adds nothing the grouping shuffle doesn't provide
+    Non-finite contract (r18): value runs through finite() first.
+    DuckDB's MAX(NaN)=NaN and +Inf deltas propagate, so the engines
+    diverged per class; NULL is the one missing-value spelling they
+    both skip identically (all-missing → 0.0 via COALESCE)."""
     e = (t(spark, sf_dir, "events")
          .filter(F.col("ts").isNotNull())
          .withColumn("value", finite("value")))
-    feats = user_session_features_fast(e)
+    feats = user_sequence_features(e)
     # greatest(n-1, 1) guards the n_events==1 row (span_us is 0 there,
     # so the guarded quotient is 0 — no CASE needed, no ANSI div-by-0)
     span_e4 = F.expr("(span_us + 50) div 100")
@@ -709,7 +720,7 @@ SPECS: list[QuerySpec] = [
     QuerySpec("events_tumbling_hourly", events_tumbling_hourly, EVENTS_TUMBLING_SQL,
               "tumbling 1h window agg (streaming twin in streaming/)"),
     QuerySpec("events_user_features", events_user_features, EVENTS_USER_FEATURES_SQL,
-              "applyInPandas grouped-map per-user sequence features"),
+              "per-user sequence features: lag window + built-in aggregates"),
     QuerySpec("events_sliding_windows", events_sliding_windows, EVENTS_SLIDING_SQL,
               "sliding 1h/30m window agg"),
     QuerySpec("events_windowed_topk", events_windowed_topk,
@@ -1043,9 +1054,23 @@ SPECS.append(
 # ~days × |types| rows.
 
 
-#: (applicationId, "share_drift_daily", sf_dir) -> persisted per-(day,
-#: type) share relation (both sides of the calendar self-join read it)
-_SHARE_DRIFT_MEMO: SessionMemo = SessionMemo()
+@session_memo
+def _daily_type_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted per-(day, type) share relation: both sides of
+    event_type_share_drift's calendar self-join read it — unpersisted
+    that would be two fact scans."""
+    daily = (
+        t(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("DAY", F.col("ts")).alias("day"),
+                 "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .withColumn("_dkey", F.expr("unix_micros(day) div 86400000000"))
+    )
+    return (
+        daily.withColumn("_day_tot",
+                         F.sum("n").over(Window.partitionBy("day")))
+        .withColumn("share_e6", F.expr(_share_e6_expr("n", "_day_tot")))
+        .persist())
 
 
 def event_type_share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,27 +1082,7 @@ def event_type_share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    from a self-join on (type, epoch_day - 1), not a positional
     #    lag — after a zero-traffic gap the drift is NULL (no
     #    yesterday), never a silent pairing with an older day.
-    # The (day, type) aggregate is memoized+persisted (pareto idiom):
-    # the self-join reads it on both sides — unpersisted that would be
-    # two fact scans.
-    key = (spark.sparkContext.applicationId, "share_drift_daily", sf_dir)
-    shared = _SHARE_DRIFT_MEMO.get(key)
-    if shared is None:
-        e = t(spark, sf_dir, "events")
-        daily = (
-            e.groupBy(F.date_trunc("DAY", F.col("ts")).alias("day"),
-                      "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("_dkey",
-                        F.expr("unix_micros(day) div 86400000000"))
-        )
-        shared = (
-            daily.withColumn("_day_tot",
-                             F.sum("n").over(Window.partitionBy("day")))
-            .withColumn("share_e6",
-                        F.expr(_share_e6_expr("n", "_day_tot")))
-            .persist())
-        _SHARE_DRIFT_MEMO[key] = shared
+    shared = _daily_type_shares(spark, sf_dir)
     a, b = shared.alias("a"), shared.alias("b")
     return (
         a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
@@ -1311,17 +1316,14 @@ SPECS.append(
 # re-ran the fact scan, caught by tools/audit_plan_scans.py) → 1-row
 # percentile agg (broadcast) → |users|-row conditional agg.
 
-_PARETO_USER_MEMO: SessionMemo = SessionMemo()
+@session_memo
+def _per_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (t(spark, sf_dir, "events").groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n")).persist())
 
 
 def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, "pareto_user", sf_dir)
-    per_user = _PARETO_USER_MEMO.get(key)
-    if per_user is None:
-        e = t(spark, sf_dir, "events")
-        per_user = (e.groupBy("user_id")
-                    .agg(F.count(F.lit(1)).alias("n")).persist())
-        _PARETO_USER_MEMO[key] = per_user
+    per_user = _per_user_counts(spark, sf_dir)
     prof = per_user.agg(
         F.percentile("n", 0.99).alias("_p99"),
         F.percentile("n", 0.95).alias("_p95"),

@@ -16,7 +16,7 @@ from pyspark.sql.types import DoubleType
 from ..functions import TOKEN_SPLIT_RE
 from ..sources import register_views
 from .base import (
-    QuerySpec, SessionMemo, finite, finite_frag, t, vec_finite_sql, vecs,
+    QuerySpec, finite, finite_frag, session_memo, t, vec_finite_sql, vecs,
 )
 
 # ---------------------------------------------------------------- subqueries
@@ -200,13 +200,79 @@ _SIMHASH_BANDS = 4  # 16 bits per band; hamming<=3 → >=1 identical band (pigeo
 _HAMMING_MAX = 3
 
 
-#: per-(application, sf_dir) memo of the persisted fingerprint table —
-#: the banded self-join reads it on BOTH sides, and without persistence
-#: each side re-runs the corpus scan + tokenize + md5 + 64-sum
-#: aggregation + bit reconstruction (profiled r7: the full query cost
-#: ~4.5 s at sf0.1 while every warm stage through the join is <1 s —
-#: the gap was this doubled upstream). Same policy as _SHINGLE_MEMO.
-_SIMHASH_MEMO: SessionMemo = SessionMemo()
+def simhash_bits(hashed_toks: DataFrame) -> DataFrame:
+    """(doc_id, sim_hi, sim_lo) fingerprints of a (doc_id, h_hi, h_lo)
+    frame of per-token 32-bit hash halves.
+
+    Packed-counter aggregation (r21 optimization round). The
+    mathematical contract is unchanged — bit b of a half is set iff SUM
+    over tokens of (2·bit_b − 1) >= 0, which is exactly 2·cnt_b >= n
+    where cnt_b counts tokens with bit b set and n is the doc's
+    (distinct-)token count. Instead of 64 separate ±1 SUM buffers (one
+    per bit per half), each of the 32 bit positions accumulates BOTH
+    halves' counters in one BIGINT: low 32 bits carry cnt_hi_b, bits
+    32+ carry cnt_lo_b (integer sums commute exactly; no float
+    anywhere). Overflow bound: acc_b <= n·(2^32 + 1), signed-64-safe to
+    n ≈ 2.1e9 tokens/doc — Spark's 2 GB string cap bounds a doc's token
+    count ~2x lower, so the packing can never wrap.
+
+    Why restructure at all: the previous form built ~700 Column objects
+    through py4j (64 sums + 64 CASE terms + chained adds) — measured
+    1.86 s of DRIVER time per invocation at sf0.1, more than the
+    query's entire execution (1.3 s). The packed form is 32 agg
+    expressions + 2 reconstruction expressions, parsed from SQL strings
+    in a handful of py4j calls; it also halves the hash-aggregate
+    buffer width. tests/test_properties.py checks it against the
+    definitional ±1 form."""
+    sim = hashed_toks.groupBy("doc_id").agg(
+        *[F.expr(f"sum(((h_hi >> {b}) & 1) + (((h_lo >> {b}) & 1) << 32))")
+          .alias(f"acc_{b}") for b in range(_SIMHASH_HALF_BITS)],
+        F.count(F.lit(1)).alias("n_toks"),
+    )
+    cnt = {"hi": lambda b: f"(acc_{b} & 4294967295)",
+           "lo": lambda b: f"(acc_{b} >> 32)"}
+    halves = [
+        F.expr("CAST(" + " + ".join(
+            f"(CASE WHEN 2 * {cnt[half](b)} >= n_toks "
+            f"THEN {1 << b} ELSE 0 END)"
+            for b in range(_SIMHASH_HALF_BITS)) + " AS BIGINT)")
+        .alias(f"sim_{half}")
+        for half in ("hi", "lo")
+    ]
+    return sim.select("doc_id", *halves)
+
+
+@session_memo
+def _simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted per-doc fingerprint table. The banded self-join reads
+    it on BOTH sides, and without persistence each side re-runs the
+    corpus scan + tokenize + md5 + 64-sum aggregation + bit
+    reconstruction (profiled r7: the full query cost ~4.5 s at sf0.1
+    while every warm stage through the join is <1 s — the gap was this
+    doubled upstream)."""
+    # fanout: tokenize + per-token md5 + the 64-sum aggregation is
+    # heavy map work; the doc_id-hash exchange it adds is REUSED by
+    # the groupBy("doc_id") in simhash_bits (ClusteredDistribution), so
+    # the fingerprint build gains parallelism without a new shuffle
+    d = t(spark, sf_dir, "documents", fanout=True)
+    # token distinctness only exists WITHIN a document, so dedup
+    # row-locally with array_distinct before exploding — the row-level
+    # .distinct() it replaces shuffled the whole exploded token index
+    # (the same corpus-sized-shuffle deletion as _shingle_sets, r7)
+    toks = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(
+            F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE))).alias("token"),
+    ).filter(F.col("token") != "")
+    hashed_toks = (
+        toks.withColumn("m", F.md5(F.col("token")))
+        .select(
+            "doc_id",
+            F.conv(F.substring("m", 1, 8), 16, 10).cast("long").alias("h_hi"),
+            F.conv(F.substring("m", 9, 8), 16, 10).cast("long").alias("h_lo"),
+        )
+    )
+    return simhash_bits(hashed_toks).persist()
 
 
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,71 +287,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding algorithms" (STOC 2002); 64-bit fingerprints with ~16-bit
     blocks per Manku/Jain/Das Sarma, "Detecting near-duplicates for web
     crawling" (WWW 2007)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hashed = _SIMHASH_MEMO.get(memo_key)
-    if hashed is None:
-        # fanout: tokenize + per-token md5 + the 64-sum aggregation is
-        # heavy map work; the doc_id-hash exchange it adds is REUSED by
-        # the groupBy("doc_id") right below (ClusteredDistribution), so
-        # the fingerprint build gains parallelism without a new shuffle
-        d = t(spark, sf_dir, "documents", fanout=True)
-        # token distinctness only exists WITHIN a document, so dedup
-        # row-locally with array_distinct before exploding — the row-level
-        # .distinct() it replaces shuffled the whole exploded token index
-        # (the same corpus-sized-shuffle deletion as _shingle_sets, r7)
-        toks = d.select(
-            "doc_id",
-            F.explode(F.array_distinct(
-                F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE))).alias("token"),
-        ).filter(F.col("token") != "")
-        hashed_toks = (
-            toks.withColumn("m", F.md5(F.col("token")))
-            .select(
-                "doc_id",
-                F.conv(F.substring("m", 1, 8), 16, 10).cast("long").alias("h_hi"),
-                F.conv(F.substring("m", 9, 8), 16, 10).cast("long").alias("h_lo"),
-            )
-        )
-        # Packed-counter aggregation (r21 optimization round). The
-        # mathematical contract is unchanged — bit b of a half is set
-        # iff SUM over tokens of (2·bit_b − 1) >= 0, which is exactly
-        # 2·cnt_b >= n where cnt_b counts tokens with bit b set and n
-        # is the doc's (distinct-)token count. Instead of 64 separate
-        # ±1 SUM buffers (one per bit per half), each of the 32 bit
-        # positions accumulates BOTH halves' counters in one BIGINT:
-        # low 32 bits carry cnt_hi_b, bits 32+ carry cnt_lo_b
-        # (integer sums commute exactly; no float anywhere). Overflow
-        # bound: acc_b <= n·(2^32 + 1), signed-64-safe to n ≈ 2.1e9
-        # tokens/doc — Spark's 2 GB string cap bounds a doc's token
-        # count ~2x lower, so the packing can never wrap.
-        #
-        # Why restructure at all: the previous form built ~700 Column
-        # objects through py4j (64 sums + 64 CASE terms + chained
-        # adds) — measured 1.86 s of DRIVER time per invocation at
-        # sf0.1, more than the query's entire execution (1.3 s). The
-        # packed form is 32 agg expressions + 2 reconstruction
-        # expressions, parsed from SQL strings in a handful of py4j
-        # calls; it also halves the hash-aggregate buffer width.
-        sim = hashed_toks.groupBy("doc_id").agg(
-            *[F.expr(f"sum(((h_hi >> {b}) & 1) + (((h_lo >> {b}) & 1) << 32))")
-              .alias(f"acc_{b}") for b in range(_SIMHASH_HALF_BITS)],
-            F.count(F.lit(1)).alias("n_toks"),
-        )
-        cnt = {"hi": lambda b: f"(acc_{b} & 4294967295)",
-               "lo": lambda b: f"(acc_{b} >> 32)"}
-        halves = [
-            F.expr("CAST(" + " + ".join(
-                f"(CASE WHEN 2 * {cnt[half](b)} >= n_toks "
-                f"THEN {1 << b} ELSE 0 END)"
-                for b in range(_SIMHASH_HALF_BITS)) + " AS BIGINT)")
-            .alias(f"sim_{half}")
-            for half in ("hi", "lo")
-        ]
-        # persisted + memoized: BOTH sides of the banded self-join read
-        # the fingerprint table — without this each side re-ran the
-        # corpus scan + md5 + sum aggregation (see _SIMHASH_MEMO)
-        hashed = sim.select("doc_id", *halves).persist()
-        _SIMHASH_MEMO[memo_key] = hashed
+    hashed = _simhash_fingerprints(spark, sf_dir)
 
     # All join-side expressions below are SQL strings parsed by one
     # F.expr each (r21): the Column-algebra form cost ~100 py4j round
@@ -572,12 +574,17 @@ ORDER BY label
 
 # ---------------------------------------------------------------- pagerank
 
-# Memoized per (applicationId, sf_dir): pagerank() caches the node and
-# link tables for reuse across its 10 iteration layers AND runs one
-# count() action at build time — without memoization every invocation in
-# a registry sweep stacked two fresh cached DataFrames and re-ran the
-# count (same leak class as the co-purchase edge list, VERDICT r4).
-_PAGERANK_MEMO: SessionMemo = SessionMemo()
+# Memoized: pagerank() caches the node and link tables for reuse across
+# its 10 iteration layers AND runs one count() action at build time —
+# without memoization every invocation in a registry sweep stacked two
+# fresh cached DataFrames and re-ran the count (same leak class as the
+# co-purchase edge list, VERDICT r4).
+@session_memo
+def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.graph import pagerank, purchase_graph
+    edges = purchase_graph(
+        t(spark, sf_dir, "lineitem"), t(spark, sf_dir, "orders"))
+    return pagerank(edges, iterations=10)
 
 
 def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -590,16 +597,8 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike the 2-decimal money columns, see the float discipline notes).
     Invariants (mass conservation, positivity, concentration) are
     additionally property-tested in tests/test_properties.py."""
-    from ..operators.graph import pagerank, purchase_graph
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    ranks = _PAGERANK_MEMO.get(memo_key)
-    if ranks is None:
-        edges = purchase_graph(
-            t(spark, sf_dir, "lineitem"), t(spark, sf_dir, "orders"))
-        ranks = pagerank(edges, iterations=10)
-        _PAGERANK_MEMO[memo_key] = ranks
     return (
-        ranks
+        _pagerank_ranks(spark, sf_dir)
         .select("node", F.round("rank", 8).alias("rank"))
         .orderBy(F.col("rank").desc(), F.col("node").asc())
         .limit(50)
@@ -974,24 +973,21 @@ SPECS: list[QuerySpec] = [
 _MIN_PAIR_SUPPORT = 2
 
 
-#: (applicationId, "basket_ob", sf_dir) -> persisted deduped
-#: (order, brand) basket relation: five consumers (pair self-join x2,
-#: marginals, order count) would otherwise each re-run the
-#: lineitem-part join at corpus scale
-_BASKET_MEMO: SessionMemo = SessionMemo()
+@session_memo
+def _brand_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted deduped (order, brand) basket relation: five consumers
+    (pair self-join x2, marginals, order count) would otherwise each
+    re-run the lineitem-part join at corpus scale."""
+    l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (l.join(p, l.l_partkey == p.p_partkey)
+            .select("l_orderkey", F.col("p_brand").alias("brand"))
+            .distinct()
+            .persist())
 
 
 def brand_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, "basket_ob", sf_dir)
-    ob = _BASKET_MEMO.get(key)
-    if ob is None:
-        l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        p = t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        ob = (l.join(p, l.l_partkey == p.p_partkey)
-              .select("l_orderkey", F.col("p_brand").alias("brand"))
-              .distinct()
-              .persist())
-        _BASKET_MEMO[key] = ob
+    ob = _brand_baskets(spark, sf_dir)
     n_orders = ob.select("l_orderkey").distinct() \
                  .agg(F.count(F.lit(1)).alias("n_orders"))
     brand_n = ob.groupBy("brand").agg(F.count(F.lit(1)).alias("n_brand"))

@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import TS_WINDOW_HI, TS_WINDOW_LO, load_table
 from .base import (
-    EMB_DIM, QuerySpec, SessionMemo, finite, finite_frag, finite_sql,
-    nonfinite_count, nonfinite_count_sql, t,
+    EMB_DIM, QuerySpec, finite, finite_frag, finite_sql, nonfinite_count,
+    nonfinite_count_sql, session_memo, t,
 )
 
 # ------------------------------------------------------- constraint audit
@@ -513,9 +513,17 @@ COLUMN_PROFILE_DOCUMENTS_SQL = _profile_oracle_sql("documents")
 # ----------------------------------------------- median/MAD rate anomaly
 
 
-#: (applicationId, "rate_hourly", sf_dir) -> persisted (type, hour)
-#: count aggregate shared by the median/MAD/output references below.
-_RATE_HOURLY_MEMO: SessionMemo = SessionMemo()
+@session_memo
+def _hourly_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted (type, hour) count aggregate shared by
+    events_rate_anomaly_mad's median/MAD/output references."""
+    return (
+        t(spark, sf_dir, "events")
+        .groupBy(F.col("event_type"),
+                 F.date_trunc("HOUR", F.col("ts")).alias("hour"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
 
 
 def events_rate_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,25 +537,14 @@ def events_rate_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the fact scan collapses to one (type, hour) aggregate
     (~types × hours rows); both median passes run over that tiny
     aggregate, so the expensive part is one map-side-combinable groupBy
-    no matter the fact-table size. The aggregate is persisted (memoized
-    per session, same idiom as _EDGES_MEMO in warehouse.py): the final
-    plan references the hourly subtree 4× (med, dev, mad, output), and
-    without the persist each reference re-ran the FACT scan+groupBy —
-    four 100 TB reads for a ~types×hours-row intermediate (caught by
+    no matter the fact-table size. The aggregate is persisted and
+    memoized per session (_hourly_rates): the final plan references the
+    hourly subtree 4× (med, dev, mad, output), and without the persist
+    each reference re-ran the FACT scan+groupBy — four 100 TB reads for
+    a ~types×hours-row intermediate (caught by
     tools/audit_plan_scans.py).
     """
-    key = (spark.sparkContext.applicationId, "rate_hourly", sf_dir)
-    hourly = _RATE_HOURLY_MEMO.get(key)
-    if hourly is None:
-        e = t(spark, sf_dir, "events")
-        hourly = (
-            e.groupBy(
-                F.col("event_type"),
-                F.date_trunc("HOUR", F.col("ts")).alias("hour"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
-        _RATE_HOURLY_MEMO[key] = hourly
+    hourly = _hourly_rates(spark, sf_dir)
 
     def discrete_median(df: DataFrame, val: str, out: str) -> DataFrame:
         wr = Window.partitionBy("event_type").orderBy(val, "hour")

@@ -21,7 +21,7 @@ from . import (
     curation, events, extended, quality, relational, scale, text, vectors,
     warehouse,
 )
-from .base import QuerySpec
+from .base import MEMOS, QuerySpec, SessionMemo
 
 _MODULE_SPECS: list[QuerySpec] = [
     *text.SPECS,
@@ -102,6 +102,11 @@ _MODULE_SPECS = [
 # End-of-round ritual: append the new round's names to the JSON, then
 # rewrite this tuple for the next round's changed plans.
 _ROUND_PRIORITY: tuple[str, ...] = (
+    # Plans that tools/gen_plan_fingerprints.py reports changed:
+    # per-user features are built-ins (plans/events.user_sequence_features),
+    # and the IVF centroids load their own vectors (@session_memo).
+    "events_user_features",
+    "ivf_recall_eval",
     # Plan and oracle changed: the word count lowercases, then deletes
     # `\W`, once per line (operators/wordcount.words_from_lines).
     "wordcount_documents",
@@ -155,13 +160,7 @@ _ROUND_PRIORITY: tuple[str, ...] = (
     # plans and executions equal r21's proven state.
     "dedup_connected_components",
     "dedup_cluster_stats",
-    # ivf pair: fingerprints are REGISTRY-ORDER-sensitive (they share
-    # _IVF_CENTROID_MEMO, so whichever builds first inlines the
-    # memoized centroid relation into the other's analyzed plan); this
-    # round's tuple rewrite changed their relative order, drifting both
-    # fingerprints with ZERO code change in vectors.py. Re-proving them
-    # is cheap and keeps the plan-drift gate mechanical.
-    "ivf_recall_eval",
+    # fingerprint drifted in round 22, not yet re-proven
     "ivf_ann",
     # Block 3 — proof-staleness tail, least-recently-proven first
     # (r17 rows, then r18 — from checked_history.json after merging
@@ -276,34 +275,9 @@ def oracle_sqls() -> dict[str, str]:
     return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle}
 
 
-def all_session_memos() -> dict[str, "SessionMemo"]:
-    """Every SessionMemo instance across the plan modules, discovered by
-    module-walk — the single source of truth for cache-reset tooling.
-
-    Rationale (r13): ``bench._reset_memos`` cleared a hand-written list
-    of six memos and then ``spark.catalog.clearCache()``. Every memo
-    NOT on the list kept serving its (now uncached) DataFrame handle —
-    a silent downgrade from one-scan-per-session to
-    recompute-per-consumer for MAD/posting/LSH-band/pareto relations on
-    bench passes 2+, and the cause of the r13 validate_head flake
-    (test_bench_isolation cleared the cache, then the pareto shape gate
-    saw a raw scan where the persisted build should be). Hand-written
-    lists rot; walk the modules instead — and the module list itself is
-    derived from the package via pkgutil (ADVICE r13: a hand-written
-    module tuple rots exactly the same way the memo list did; a future
-    plans module holding a SessionMemo must be found without editing
-    this function). A memo re-exported under two names dedups by object
-    identity at the consumer (reset tooling clears the same object
-    twice, harmlessly)."""
-    import importlib
-    import pkgutil
-
-    from .base import SessionMemo
-    pkg = importlib.import_module(__package__)
-    memos: dict[str, SessionMemo] = {}
-    for info in pkgutil.iter_modules(pkg.__path__):
-        mod = importlib.import_module(f"{__package__}.{info.name}")
-        for attr, val in vars(mod).items():
-            if isinstance(val, SessionMemo):
-                memos[f"{info.name}.{attr}"] = val
-    return memos
+def all_session_memos() -> dict[str, SessionMemo]:
+    """Every ``@session_memo`` builder's memo, as ``{"<module>.<builder>":
+    memo}`` — the single source of truth for cache-reset tooling
+    (``bench._reset_memos``). The decorator registers each memo when its
+    plan module imports, and this module imports them all."""
+    return dict(MEMOS)

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..functions import TOKEN_SPLIT_RE, word_shingles
 from ..operators.wordcount import word_count
 from ..session import free_checkpoint, truncate_lineage
-from .base import QuerySpec, SessionMemo, t
+from .base import QuerySpec, session_memo, t
 from .warehouse import _share_e6_expr
 
 # ------------------------------------------------------------ flagship
@@ -473,23 +473,13 @@ ORDER BY kept_doc_id
 # ------------------------------------------------------------ n-gram Jaccard near-dup
 
 
-#: per-(application, sf_dir, n) memo: both near-dup pipelines (and every
-#: repeated invocation in a driver/bench session) share ONE shingle-index
-#: DataFrame pair instead of re-registering equal persist() entries
-#: (Spark's CacheManager dedupes the storage either way, but each extra
-#: registration logs a warning and rebuilds the analyzed plan)
-_SHINGLE_MEMO: SessionMemo = SessionMemo()
-
-#: per-(application, sf_dir) memo of the VERIFIED Jaccard pair set — the
-#: expensive AllPairs cascade runs once per session per dataset; repeated
-#: invocations (bench loops, cc, curation pipeline) reuse the one
-#: persisted DataFrame instead of stacking new cache entries
-_NGRAM_PAIRS_MEMO: SessionMemo = SessionMemo()
-
-
+@session_memo
 def _shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3):
     """(doc_id, shingle) exploded-distinct + per-doc sorted shingle-set
-    arrays. Shared by the Jaccard and MinHash pipelines.
+    arrays. Shared by the Jaccard and MinHash pipelines, memoized so
+    both (and every repeated invocation in a driver/bench session)
+    share ONE shingle-index DataFrame pair instead of re-registering
+    equal persist() entries.
 
     Both are persisted: the shingle index feeds 5+ consumers per query
     (document frequency, prefix window, sizes, both verify sides) and AQE
@@ -498,10 +488,6 @@ def _shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3):
     one plan without persistence. Materializing the inverted index is
     the standard AllPairs shape; MEMORY_AND_DISK (the default) spills at
     100 TB rather than recomputing the corpus-sized explode per consumer."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir, n)
-    cached = _SHINGLE_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
     # fanout: the per-doc shingle build (tokenize + n-gram + distinct +
     # sort) is the heaviest map work in the repo — single-task on a
     # 1-row-group input, it profiled at ~4.8 s/stage at sf0.1 (r21)
@@ -525,7 +511,6 @@ def _shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3):
         .persist()
     )
     sh = sets.select("doc_id", F.explode("sh_set").alias("shingle")).persist()
-    _SHINGLE_MEMO[memo_key] = (sh, sets)
     return sh, sets
 
 
@@ -588,24 +573,24 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PPJoin, Xiao et al., WWW 2008) are a further-pruning option if the
     candidate set ever dominates.
     """
+    return _verified_jaccard_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+@session_memo
+def _verified_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The VERIFIED Jaccard>=0.5 pair set. It is the input of
+    connected-components and the curation pipeline, so it is persisted
+    AND memoized: the expensive AllPairs cascade runs once per session
+    per dataset, and repeated invocations reuse ONE cached DataFrame
+    instead of stacking a fresh persist() per call (the round-2 leak:
+    executor storage grew per invocation)."""
     threshold = 0.5
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _NGRAM_PAIRS_MEMO.get(memo_key)
-    if memo is not None:
-        return memo.orderBy("doc_a", "doc_b")
     cand, sets = _jaccard_candidates(spark, sf_dir, threshold)
-    # the verified pair set is the input of connected-components and the
-    # curation pipeline — persist AND memoize per (application, sf_dir)
-    # so downstream consumers and repeated invocations in one session
-    # reuse ONE cached DataFrame instead of stacking a fresh persist()
-    # per call (the round-2 leak: executor storage grew per invocation).
-    pairs = (
+    return (
         _verify_pairs(cand, sets, threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
         .persist()
     )
-    _NGRAM_PAIRS_MEMO[memo_key] = pairs
-    return pairs.orderBy("doc_a", "doc_b")
 
 
 def _threshold_floor_rational(threshold: float) -> tuple[int, int]:
@@ -640,7 +625,7 @@ def _jaccard_candidates(spark: SparkSession, sf_dir: str,
     pref is persisted exactly once per call (both self-join sides read
     it during the single build) — the sole production caller memoizes
     the verified result, so this still registers one cache entry per
-    dataset per session, same policy as _SHINGLE_MEMO."""
+    dataset per session, same policy as _shingle_sets."""
     p, q = _threshold_floor_rational(threshold)
     sh, sets = _shingle_sets(spark, sf_dir, 3)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -968,16 +953,6 @@ ORDER BY doc_id, chunk_idx
 # the oracle is a recursive CTE computing min reachable label.
 
 
-#: converged-labels memo per (application, sf_dir): the iterative driver
-#: loop materializes its fixpoint in cached labels — re-running the loop
-#: for a second consumer (the curation pipeline, a repeated bench/driver
-#: invocation) would re-launch every round's job for identical results.
-#: Plan-level caching can't express this (the loop is driver code), so
-#: the memo is the DataFrame analogue of a materialized view. Data under
-#: sf_dir is immutable for a session, so the memo cannot go stale.
-_CC_MEMO: SessionMemo = SessionMemo()
-
-
 #: Diameter cap for min-label propagation. Near-dup components are
 #: star/clique-shaped (diameter ≲ 3 at these thresholds), so 20 rounds
 #: is far beyond anything a real corpus produces — but exceeding it must
@@ -1063,16 +1038,20 @@ def _min_label_propagation(edges: DataFrame,
     return labels
 
 
+@session_memo
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster the Jaccard>=0.5 near-dup pairs into components; survivor
     = min doc_id per component. Driver loop controls ITERATION only
     (convergence flag = one int per round); all data flow is joins.
     At scale: edges ≪ docs, each round is one shuffle join; rounds ≈
-    component diameter (near-dup clusters are tiny)."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CC_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
+    component diameter (near-dup clusters are tiny).
+
+    Memoized: the loop materializes its fixpoint in cached labels, and
+    re-running it for a second consumer (the curation pipeline, a
+    repeated bench/driver invocation) would re-launch every round's job
+    for identical results. Plan-level caching can't express this (the
+    loop is driver code), so the memo is the DataFrame analogue of a
+    materialized view."""
     d = t(spark, sf_dir, "documents")
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     # truncate_lineage (not cache): the iterative loop's real cost on a
@@ -1095,15 +1074,13 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,  # materializes inside the loop's first-round job
     )
     labels = _min_label_propagation(edges)
-    result = (
+    return (
         d.select("doc_id").join(labels, "doc_id", "left")
         .select("doc_id",
                 F.coalesce("component", F.col("doc_id")).alias("component"))
         .withColumn("is_kept", (F.col("component") == F.col("doc_id")).cast("int"))
         .orderBy("doc_id")
     )
-    _CC_MEMO[memo_key] = result
-    return result
 
 
 def _components_sql() -> str:
@@ -1375,32 +1352,25 @@ ORDER BY doc_id, rk
 # perplexity filter thresholds on.
 
 
-#: (applicationId, "pdt", sf_dir) -> persisted per-doc term counts.
-#: ONE tokenize pass over the corpus serves every unigram consumer:
-#: unigram_rarity_score (corpus frequency, total, and per-doc scoring
-#: were three independent tokenize scans — tools/audit_plan_scans.py)
-#: and bigram_surprisal_score's unigram model. The relation is the
-#: standard (doc, term, n) posting shape — strictly smaller than the
-#: raw token stream it replaces.
-_PDT_MEMO: SessionMemo = SessionMemo()
-
-
+@session_memo
 def _per_doc_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, "pdt", sf_dir)
-    pdt = _PDT_MEMO.get(key)
-    if pdt is None:
-        d = t(spark, sf_dir, "documents", fanout=True)
-        toks = (
-            d.select("doc_id",
-                     F.explode(F.split(F.trim(F.lower("text")),
-                                       TOKEN_SPLIT_RE)).alias("term"))
-            .filter(F.col("term") != "")
-        )
-        pdt = (toks.groupBy("doc_id", "term")
-               .agg(F.count(F.lit(1)).alias("n"))
-               .persist())
-        _PDT_MEMO[key] = pdt
-    return pdt
+    """Persisted per-doc term counts. ONE tokenize pass over the corpus
+    serves every unigram consumer: unigram_rarity_score (corpus
+    frequency, total, and per-doc scoring were three independent
+    tokenize scans — tools/audit_plan_scans.py) and
+    bigram_surprisal_score's unigram model. The relation is the standard
+    (doc, term, n) posting shape — strictly smaller than the raw token
+    stream it replaces."""
+    d = t(spark, sf_dir, "documents", fanout=True)
+    toks = (
+        d.select("doc_id",
+                 F.explode(F.split(F.trim(F.lower("text")),
+                                   TOKEN_SPLIT_RE)).alias("term"))
+        .filter(F.col("term") != "")
+    )
+    return (toks.groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .persist())
 
 
 def unigram_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1458,27 +1428,18 @@ ORDER BY doc_id
 # across libm implementations, floor-div of counts is bit-exact.
 
 
-#: (applicationId, "pdb", sf_dir) -> persisted per-doc bigram counts
-#: (same posting-shape idiom as _PDT_MEMO): the bigram model and the
-#: per-doc scoring pass both read it, so the corpus is shingled once.
-_PDB_MEMO: SessionMemo = SessionMemo()
-
-
+@session_memo
 def _per_doc_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted (doc_id, bigram, nb) posting relation — one shingle
-    pass serves bigram_surprisal_score AND token_pmi_top_pairs."""
-    key = (spark.sparkContext.applicationId, "pdb", sf_dir)
-    pdb = _PDB_MEMO.get(key)
-    if pdb is None:
-        d = t(spark, sf_dir, "documents", fanout=True)
-        toks_col = F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE)
-        big = d.select(
-            "doc_id", F.explode(word_shingles(toks_col, 2)).alias("bigram"))
-        pdb = (big.groupBy("doc_id", "bigram")
-               .agg(F.count(F.lit(1)).alias("nb"))
-               .persist())
-        _PDB_MEMO[key] = pdb
-    return pdb
+    """Persisted (doc_id, bigram, nb) posting relation (the posting
+    shape of _per_doc_term_counts) — one shingle pass serves
+    bigram_surprisal_score AND token_pmi_top_pairs."""
+    d = t(spark, sf_dir, "documents", fanout=True)
+    toks_col = F.split(F.trim(F.lower("text")), TOKEN_SPLIT_RE)
+    big = d.select(
+        "doc_id", F.explode(word_shingles(toks_col, 2)).alias("bigram"))
+    return (big.groupBy("doc_id", "bigram")
+            .agg(F.count(F.lit(1)).alias("nb"))
+            .persist())
 
 
 def bigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1724,35 +1685,39 @@ SPECS.append(
 # runs over the <= 20 bucket rows. All counts exact BIGINT.
 
 
-#: (applicationId, "vocab_bt", sf_dir) -> persisted (tok, bucket) stats
-_VOCAB_BT_MEMO: SessionMemo = SessionMemo()
-
-
-def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _vocab_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, mn, mx, bucket, txt): each document with its corpus
+    bucket and the id bounds the bucket arithmetic used."""
     d = t(spark, sf_dir, "documents", fanout=True)
     bounds = d.agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
     bucket = F.expr("(doc_id - mn) * 20 div (mx - mn + 1)")
-    docs = (d.crossJoin(F.broadcast(bounds))
+    return (d.crossJoin(F.broadcast(bounds))
             .select("doc_id", "mn", "mx", bucket.alias("bucket"),
                     F.lower(F.trim("text")).alias("txt")))
-    toks = (docs.select("doc_id", "bucket", "mn", "mx",
-                        F.explode(F.split("txt", TOKEN_SPLIT_RE)).alias("tok"))
+
+
+@session_memo
+def _vocab_token_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted (tok, bucket) partials carrying occurrence counts AND
+    min doc_id: ONE corpus-sized aggregation feeds both token branches
+    of vocab_growth_curve. Without materialization, per-branch column
+    pruning specializes each consumer's aggregate and Catalyst plans two
+    independent corpus scans — with it, tokcnt and newt are small
+    re-aggs of one cached relation."""
+    toks = (_vocab_buckets(spark, sf_dir)
+            .select("doc_id", "bucket", "mn", "mx",
+                    F.explode(F.split("txt", TOKEN_SPLIT_RE)).alias("tok"))
             .filter(F.col("tok") != ""))
-    # ONE corpus-sized aggregation feeds both token branches: the
-    # (tok, bucket) partials carry occurrence counts AND min doc_id.
-    # Persisted + memoized (the shingle-index idiom above): per-branch
-    # column pruning specializes each consumer's aggregate, so without
-    # materialization Catalyst plans two independent corpus scans —
-    # with it, tokcnt and newt are small re-aggs of one cached relation.
-    memo_key = (spark.sparkContext.applicationId, "vocab_bt", sf_dir)
-    bt = _VOCAB_BT_MEMO.get(memo_key)
-    if bt is None:
-        bt = (toks.groupBy("tok", "bucket")
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.min("doc_id").alias("min_doc"),
-                   F.first("mn").alias("mn"), F.first("mx").alias("mx"))
-              .persist())
-        _VOCAB_BT_MEMO[memo_key] = bt
+    return (toks.groupBy("tok", "bucket")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min("doc_id").alias("min_doc"),
+                 F.first("mn").alias("mn"), F.first("mx").alias("mx"))
+            .persist())
+
+
+def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _vocab_buckets(spark, sf_dir)
+    bt = _vocab_token_buckets(spark, sf_dir)
     firsts = (bt.groupBy("tok")
               .agg(F.min("min_doc").alias("first_doc"),
                    F.first("mn").alias("mn"), F.first("mx").alias("mx")))
@@ -2333,8 +2298,8 @@ SPECS.append(
 # ordered — an upper-triangular source×source matrix. The diagonal is
 # intra-source duplication (boilerplate); off-diagonal mass is
 # syndication/mirroring, the signal curation uses to pick ONE canonical
-# source. In-session the verified pair set rides _NGRAM_PAIRS_MEMO (no
-# new shingle pass); the source lookup is a cheap 2-column projection
+# source. In-session the verified pair set rides _verified_jaccard_pairs
+# (no new shingle pass); the source lookup is a cheap 2-column projection
 # joined twice on doc id. Output bounded by |sources|².
 
 

@@ -24,7 +24,7 @@ from pyspark.sql.functions import broadcast
 
 from ..functions import arrow_dot, cosine, dot, l2_norm
 from ..sources.tables import file_stamp
-from .base import EMB_DIM, QuerySpec, SessionMemo, t, vec_finite_sql, vecs
+from .base import EMB_DIM, QuerySpec, session_memo, t, vec_finite_sql, vecs
 
 _N_PROBES = 5   # vec_id < 5 are the probe vectors
 _TOP_K = 5
@@ -339,26 +339,6 @@ def _planes_sql_literal(planes: list[list[float]]) -> str:
         "[" + ", ".join(str(v) for v in row) + "]" for row in planes) + "]"
 
 
-#: (applicationId, "lsh_sigs", sf_dir) -> persisted corpus (vec_id,
-#: sig) SIGNATURE relation. The hyperplane-signature projection is the
-#: expensive per-vector step (the only Python/Arrow stage); unmemoized
-#: it re-ran for every reference (twice inside lsh_bucket_ann, twice
-#: more in embedding_near_dup's band self-join —
-#: tools/audit_plan_scans.py). One signature pass serves every LSH
-#: consumer in the session.
-#:
-#: The memo holds SIGNATURES, not the exploded (vec_id, band_key)
-#: relation (r15): the band relation is L× the rows and, persisted,
-#: its columnar string cache build OOM'd a 537M-row build at the
-#: measured L=32 point (16.78M vectors × 32 tables —
-#: logs/lsh_above_clamp2_probe_r15.txt's first run). The explode +
-#: substring banding is pure whole-stage codegen over the cached
-#: signatures — recomputing it per consumer costs no Python and no
-#: shuffle, while the cache stays n rows at any L. Same reasoning a
-#: real cluster needs: cache the narrow product of the expensive
-#: stage, never a multiplied expansion of it.
-_LSH_SIGS_MEMO: SessionMemo = SessionMemo()
-
 #: persist the signature relation in MEMORY while its estimated size
 #: fits comfortably in this process's share of memory; above that,
 #: DISK_ONLY (r16, VERDICT r15 item 4) — one streamed UDF pass then
@@ -383,32 +363,40 @@ _LSH_CACHE_MAX_BYTES = int(os.environ.get(
     "SPARK_GRAFT_LSH_CACHE_MAX_BYTES", str(2 * 1024 ** 3)))
 
 
+@session_memo
 def lsh_corpus_sigs(spark: SparkSession, sf_dir: str,
                     w: int, n_tables: int, n_vecs: int) -> DataFrame:
-    # (w, n_tables) are part of the key: a caller forcing a different
-    # operating point onto an already-memoized sf_dir must get planes
-    # built for ITS parameters, never the first caller's (the served
-    # path always derives them from the corpus count, so in normal use
-    # the key is one entry per sf_dir as before)
-    key = (spark.sparkContext.applicationId, "lsh_sigs", sf_dir,
-           w, n_tables)
-    sigs = _LSH_SIGS_MEMO.get(key)
-    if sigs is None:
-        e = vecs(spark, sf_dir).select("vec_id", "embedding")
-        sigs = e.select(
-            "vec_id",
-            lsh_signature(F.col("embedding"),
-                          plane_matrix(n_planes=w * n_tables))
-            .alias("sig"))
-        # per-row: w·L sig chars + vec_id + row overhead (a measured
-        # upper bound on the columnar cache — see the guard's note)
-        if n_vecs * (w * n_tables + 16) <= _LSH_CACHE_MAX_BYTES:
-            sigs = sigs.persist()
-        else:
-            from pyspark import StorageLevel
-            sigs = sigs.persist(StorageLevel.DISK_ONLY)
-        _LSH_SIGS_MEMO[key] = sigs
-    return sigs
+    """Persisted corpus (vec_id, sig) SIGNATURE relation. The
+    hyperplane-signature projection is the expensive per-vector step
+    (the only Python/Arrow stage); unmemoized it re-ran for every
+    reference (twice inside lsh_bucket_ann, twice more in
+    embedding_near_dup's band self-join — tools/audit_plan_scans.py).
+    One signature pass serves every LSH consumer in the session. The
+    served path derives (w, n_tables, n_vecs) from the corpus count, so
+    in normal use the memo holds one entry per sf_dir.
+
+    The memo holds SIGNATURES, not the exploded (vec_id, band_key)
+    relation (r15): the band relation is L× the rows and, persisted,
+    its columnar string cache build OOM'd a 537M-row build at the
+    measured L=32 point (16.78M vectors × 32 tables —
+    logs/lsh_above_clamp2_probe_r15.txt's first run). The explode +
+    substring banding is pure whole-stage codegen over the cached
+    signatures — recomputing it per consumer costs no Python and no
+    shuffle, while the cache stays n rows at any L. Same reasoning a
+    real cluster needs: cache the narrow product of the expensive
+    stage, never a multiplied expansion of it."""
+    e = vecs(spark, sf_dir).select("vec_id", "embedding")
+    sigs = e.select(
+        "vec_id",
+        lsh_signature(F.col("embedding"),
+                      plane_matrix(n_planes=w * n_tables))
+        .alias("sig"))
+    # per-row: w·L sig chars + vec_id + row overhead (a measured
+    # upper bound on the columnar cache — see the guard's note)
+    if n_vecs * (w * n_tables + 16) <= _LSH_CACHE_MAX_BYTES:
+        return sigs.persist()
+    from pyspark import StorageLevel
+    return sigs.persist(StorageLevel.DISK_ONLY)
 
 
 def lsh_corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,27 +596,21 @@ _IVF_K = 16       # lists; production sizes this ~sqrt(n)
 _IVF_NPROBE = 4
 
 
-#: (applicationId, "ivf_centroids", sf_dir) -> persisted K-row centroid
-#: relation. Both ranking passes (corpus assignment + probe-list pick)
-#: need the SAME centroid set; unmemoized, each re-ran the corpus-wide
-#: md5-order TakeOrdered (caught by tools/audit_plan_scans.py).
-_IVF_CENTROID_MEMO: SessionMemo = SessionMemo()
-
-
-def _ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, "ivf_centroids", sf_dir)
-    c = _IVF_CENTROID_MEMO.get(key)
-    if c is None:
-        c = (
-            e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(_IVF_K)
-            .select(F.col("vec_id").alias("list_id"),
-                    F.col("embedding").alias("c_emb"),
-                    l2_norm(F.col("embedding")).alias("c_norm"))
-            .persist()
-        )
-        _IVF_CENTROID_MEMO[key] = c
-    return c
+@session_memo
+def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted K-row centroid relation. Both ranking passes (corpus
+    assignment + probe-list pick) need the SAME centroid set;
+    unmemoized, each re-ran the corpus-wide md5-order TakeOrdered
+    (caught by tools/audit_plan_scans.py)."""
+    return (
+        vecs(spark, sf_dir).select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+        .limit(_IVF_K)
+        .select(F.col("vec_id").alias("list_id"),
+                F.col("embedding").alias("c_emb"),
+                l2_norm(F.col("embedding")).alias("c_norm"))
+        .persist()
+    )
 
 
 def _ivf_rank(vectors: DataFrame, centroids: DataFrame, rank_limit: int):
@@ -665,7 +647,7 @@ def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering (the original, 2×-corpus-pass form).
     """
     e = vecs(spark, sf_dir).select("vec_id", "embedding")
-    centroids = _ivf_centroids(spark, sf_dir, e)
+    centroids = _ivf_centroids(spark, sf_dir)
     assign = _ivf_rank(e, centroids, 1)
     # probe lists rank against the SAME full-corpus centroid set
     probe_lists = (

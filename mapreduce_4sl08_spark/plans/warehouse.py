@@ -19,7 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .base import QuerySpec, SessionMemo, cents, cents_sql, dollars, t
+from .base import QuerySpec, cents, cents_sql, dollars, session_memo, t
 
 # --------------------------------------------------------------- SCD type 2
 
@@ -250,20 +250,15 @@ _COPURCHASE_MIN_ORDERS = 2
 # standard mitigation). TPC-H baskets max out at ~7 items, so the cap is
 # output-invariant on the test fixtures (asserted in tests).
 _COPURCHASE_MAX_BASKET = 64
-# Memoized per (applicationId, sf_dir): all three legs of the triangle
-# self-join read the edge list — without persistence the
-# scan→distinct→self-join→agg subtree runs 3× (measured 37 exchanges vs
-# 7) — and memoizing (vs per-call persist()) keeps a registry sweep from
-# stacking pinned RDDs session-wide (VERDICT r4). Same rationale as the
-# shingle index in plans/text.py.
-_EDGES_MEMO: SessionMemo = SessionMemo()
 
 
+# Memoized: all three legs of the triangle self-join read the edge list
+# — without persistence the scan→distinct→self-join→agg subtree runs 3×
+# (measured 37 exchanges vs 7) — and memoizing (vs per-call persist())
+# keeps a registry sweep from stacking pinned RDDs session-wide
+# (VERDICT r4). Same rationale as the shingle index in plans/text.py.
+@session_memo
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGES_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
     li = t(spark, sf_dir, "lineitem")
     # The basket-size window reuses the hash partitioning on l_orderkey
     # that the pair self-join needs anyway — the cap costs a sort within
@@ -276,7 +271,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("basket_n")
     )
     a, b = items.alias("a"), items.alias("b")
-    edges = (
+    return (
         a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
         .groupBy(F.col("a.l_partkey").alias("p1"),
@@ -286,8 +281,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p1", "p2")
         .persist()
     )
-    _EDGES_MEMO[memo_key] = edges
-    return edges
 
 
 def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,26 +591,19 @@ SPECS: list[QuerySpec] = [
 # comparisons on identical doubles.
 
 
-#: (applicationId, "orders_per_cust", sf_dir) -> persisted per-customer
-#: order rollup shared by customer_rfm_segments and
-#: revenue_concentration_deciles (one orders scan serves both queries
-#: and every threshold/score branch within each — unpersisted forms
-#: re-scanned orders 4x per query; the audit tool flagged it)
-_PER_CUST_MEMO: SessionMemo = SessionMemo()
-
-
+@session_memo
 def _per_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, "orders_per_cust", sf_dir)
-    df = _PER_CUST_MEMO.get(key)
-    if df is None:
-        o = t(spark, sf_dir, "orders")
-        df = (o.groupBy("o_custkey")
-              .agg(F.max("o_orderdate").alias("last_order"),
-                   F.count(F.lit(1)).alias("n_orders"),
-                   F.sum(cents("o_totalprice")).alias("spend_c"))
-              .persist())
-        _PER_CUST_MEMO[key] = df
-    return df
+    """Persisted per-customer order rollup shared by
+    customer_rfm_segments and revenue_concentration_deciles (one orders
+    scan serves both queries and every threshold/score branch within
+    each — unpersisted forms re-scanned orders 4x per query; the audit
+    tool flagged it)."""
+    o = t(spark, sf_dir, "orders")
+    return (o.groupBy("o_custkey")
+            .agg(F.max("o_orderdate").alias("last_order"),
+                 F.count(F.lit(1)).alias("n_orders"),
+                 F.sum(cents("o_totalprice")).alias("spend_c"))
+            .persist())
 
 
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,10 +17,10 @@ Concurrency-safety notes, audited before conversion:
 
 - Spark job submission, plan analysis, and py4j are thread-safe (py4j
   opens one gateway connection per thread).
-- Session memos (shingle index, posting lists, CC labels, …) may be
-  built twice under a race — wasteful, never wrong: both builds are
-  value-identical and the CacheManager dedupes storage; the memo dict
-  write is atomic under the GIL.
+- Session memos (shingle index, posting lists, CC labels, …) are built
+  once per key: ``@session_memo`` (plans/base.py) builds a missing key
+  under that key's lock, and concurrent callers wait for the one build
+  and get the same object.
 - The only session-global names plan builders create (temp views via
   register_views, the chunking UDTF) are same-name/same-definition per
   fixture dir, and Spark binds temp views into the plan at analysis

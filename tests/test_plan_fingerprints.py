@@ -107,3 +107,22 @@ def _swept(spark, request):
 def test_plan_drift_requires_priority_reproof(_swept, name):
     from tests.parallel_sweep import reraise
     reraise(_swept, name)
+
+
+def test_fingerprint_does_not_depend_on_memo_state(spark):
+    """A memoized intermediate depends on its key alone, so a plan's
+    fingerprint cannot depend on which query built a shared memo first:
+    with every memo cleared, fingerprint the registry in registry order,
+    serially, then again over the now-warm memos — each query's two
+    fingerprints are equal and match the snapshot."""
+    from mapreduce_4sl08_spark.plans import all_session_memos
+    for memo in all_session_memos().values():
+        memo.clear()
+
+    def fingerprints():
+        return {name: _tool.fingerprint(spec.fn(spark, _tool.SF_DIR))
+                for name, spec in QUERIES.items()}
+
+    cold, warm = fingerprints(), fingerprints()
+    assert [n for n in QUERIES if cold[n] != warm[n]] == []
+    assert [n for n in QUERIES if cold[n] != _SNAPSHOT[n]] == []

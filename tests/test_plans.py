@@ -3,6 +3,8 @@
 must survive refactors. These assert on the executed plan text — the
 same thing a human checks with .explain('formatted')."""
 
+import pytest
+
 from mapreduce_4sl08_spark.plans import QUERIES
 
 
@@ -301,7 +303,7 @@ def test_copurchase_basket_cap_excludes_hot_baskets(spark, tmp_path):
     # (cap+36 choose 2) pairs were never generated
     assert got == {(1, 2), (1, 3), (2, 3)}
     edges.unpersist()
-    warehouse._EDGES_MEMO.clear()
+    warehouse._copurchase_edges.memo.clear()
 
 
 def test_copurchase_cap_is_output_invariant_on_fixture(spark, sf_dir):
@@ -442,17 +444,17 @@ def test_reliable_checkpoint_knob(spark, sf_smoke_dir, tmp_path, monkeypatch):
 
     from mapreduce_4sl08_spark.plans import text
 
-    text._CC_MEMO.clear()
+    text.dedup_connected_components.memo.clear()
     local = text.dedup_connected_components(spark, sf_smoke_dir).collect()
 
     ckpt = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckpt)
-    text._CC_MEMO.clear()
+    text.dedup_connected_components.memo.clear()
     try:
         reliable = text.dedup_connected_components(
             spark, sf_smoke_dir).collect()
     finally:
-        text._CC_MEMO.clear()  # don't leak reliable-ckpt frames to others
+        text.dedup_connected_components.memo.clear()  # don't leak reliable-ckpt frames to others
     assert reliable == local
     found = [f for _root, _dirs, files in os.walk(ckpt) for f in files]
     assert found, "reliable path wrote nothing under the checkpoint dir"
@@ -471,9 +473,9 @@ def test_session_memo_evicts_dead_application_entries():
     assert m.get(("app-1", "sfA")) == "dfA"
     assert len(m) == 2  # same app, two datasets — both kept
 
-    # context cycled: every call site keys by the LIVE session's app id
-    # (that's the contract — keys are always minted from spark.sparkContext),
-    # so an access under app-2 means app-1 is dead: evicted on both paths
+    # context cycled: @session_memo keys every entry by the LIVE
+    # session's app id, so an access under app-2 means app-1 is dead:
+    # evicted on both paths
     m[("app-2", "sfA")] = "dfA2"
     assert len(m) == 1
     assert m.get(("app-2", "sfA")) == "dfA2"
@@ -488,11 +490,58 @@ def test_all_plan_memos_are_session_scoped():
     from mapreduce_4sl08_spark.plans.base import SessionMemo
 
     memos = all_session_memos()
-    # the module-walk must find every known memo (sanity floor: the six
-    # originally hand-listed plus the r12/r13 additions)
-    assert len(memos) >= 15, sorted(memos)
+    # every @session_memo builder registers itself at import
+    assert len(memos) >= 16, sorted(memos)
     for name, memo in memos.items():
         assert isinstance(memo, SessionMemo), name
+
+
+def test_session_memo_builds_once_under_contention(spark):
+    """Eight threads racing on one cold key of a @session_memo builder
+    get ONE build, one object and one memo entry; a call with the
+    default spelled out shares that entry; a build that raises stores
+    nothing; a DataFrame parameter is refused."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mapreduce_4sl08_spark.plans import base
+
+    calls = []
+
+    @base.session_memo
+    def _contended(spark, sf_dir, n=3):
+        calls.append(n)
+        time.sleep(0.05)  # hold the build open while the others arrive
+        if sf_dir == "bad":
+            raise ValueError("build failed")
+        return object()
+
+    start = threading.Barrier(8, timeout=60)
+
+    def call(_):
+        start.wait()
+        return _contended(spark, "sf")
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(call, i) for i in range(8)]
+            got = [f.result(timeout=120) for f in futures]
+        assert calls == [3]
+        assert len({id(g) for g in got}) == 1
+        assert len(_contended.memo) == 1
+        assert _contended(spark, "sf", 3) is got[0] and calls == [3]
+        with pytest.raises(ValueError):
+            _contended(spark, "bad")
+        with pytest.raises(TypeError, match="not a DataFrame"):
+            _contended(spark, "sf", spark.range(1))
+        assert len(_contended.memo) == 1
+    finally:
+        sys.setswitchinterval(prev)
+        base.MEMOS.pop("test_plans._contended", None)
 
 
 def test_memo_bounded_across_real_session_cycle():
@@ -515,8 +564,9 @@ for cycle in range(2):
              .config('spark.ui.enabled', 'false').getOrCreate())
     seen_apps.add(spark.sparkContext.applicationId)
     warehouse.copurchase_triangles(spark, '/root/testdata/sf0.001').count()
-    assert len(warehouse._EDGES_MEMO) == 1, dict(warehouse._EDGES_MEMO)
-    (app_id,) = {k[0] for k in warehouse._EDGES_MEMO}
+    memo = warehouse._copurchase_edges.memo
+    assert len(memo) == 1, dict(memo)
+    (app_id,) = {k[0] for k in memo}
     assert app_id == spark.sparkContext.applicationId
     spark.stop()
 assert len(seen_apps) == 2, seen_apps  # genuinely two applications

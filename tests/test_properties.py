@@ -162,18 +162,8 @@ def test_simhash_packed_counters_equal_definitional_sums(spark):
             for b in range(bits)) + " AS BIGINT)").alias(f"sim_{h}")
         for h in ("hi", "lo")])
 
-    # packed form, exactly as simhash_dedup builds it
-    sim = hashed_toks.groupBy("doc_id").agg(
-        *[F.expr(f"sum(((h_hi >> {b}) & 1) + (((h_lo >> {b}) & 1) << 32))")
-          .alias(f"acc_{b}") for b in range(bits)],
-        F.count(F.lit(1)).alias("n_toks"))
-    cnt = {"hi": lambda b: f"(acc_{b} & 4294967295)",
-           "lo": lambda b: f"(acc_{b} >> 32)"}
-    packed = sim.select("doc_id", *[
-        F.expr("CAST(" + " + ".join(
-            f"(CASE WHEN 2 * {cnt[h](b)} >= n_toks THEN {1 << b} ELSE 0 END)"
-            for b in range(bits)) + " AS BIGINT)").alias(f"sim_{h}")
-        for h in ("hi", "lo")])
+    # packed form: the production expression simhash_dedup persists
+    packed = X.simhash_bits(hashed_toks)
 
     want = sorted(map(tuple, ref.collect()))
     got = sorted(map(tuple, packed.collect()))
@@ -201,15 +191,45 @@ def test_knn_rank_ordering(spark, sf_smoke_dir):
         assert [rk for rk, _ in lst] == list(range(1, len(lst) + 1))
 
 
+def _user_features_reference(events):
+    """Per-user features as a pandas grouped map — the reference the
+    built-in :func:`user_sequence_features` must equal row for row."""
+    def features(pdf):
+        import pandas as pd
+        pdf = pdf.sort_values(["ts", "event_id"])
+        # explicit µs unit: Arrow may hand pandas datetime64[ns] or [us]
+        ts = pdf["ts"].astype("datetime64[us]").astype("int64")
+        deltas = pdf["value"].diff().abs().dropna()
+        return pd.DataFrame({
+            "user_id": [pdf["user_id"].iloc[0]],
+            "n_events": [len(pdf)],
+            "span_us": [int(ts.max() - ts.min())],
+            "max_value_delta": [float(deltas.max()) if len(deltas) else 0.0],
+        })
+
+    return (events.select("user_id", "event_id", "ts", "value")
+            .groupBy("user_id")
+            .applyInPandas(features, "user_id long, n_events long, "
+                                     "span_us long, max_value_delta double"))
+
+
 def test_grouped_map_fast_equals_canonical(spark, sf_smoke_dir):
-    """mapInPandas partition-grouped implementation must equal the
-    canonical applyInPandas one row-for-row."""
-    from mapreduce_4sl08_spark.operators.grouped import (
-        user_session_features, user_session_features_fast)
-    e = load_table(spark, sf_smoke_dir, "events")
-    a = sorted(map(tuple, user_session_features(e).collect()))
-    b = sorted(map(tuple, user_session_features_fast(e).collect()))
-    assert a == b
+    """The built-in lag-window form of the per-user features equals the
+    pandas grouped-map reference row for row, on the rows
+    events_user_features feeds it (timed, value through finite())."""
+    import pandas as pd
+
+    from mapreduce_4sl08_spark.plans.base import finite
+    from mapreduce_4sl08_spark.plans.events import user_sequence_features
+    e = (load_table(spark, sf_smoke_dir, "events")
+         .filter(F.col("ts").isNotNull())
+         .withColumn("value", finite("value")))
+    got = (user_sequence_features(e).toPandas()
+           .sort_values("user_id").reset_index(drop=True))
+    want = (_user_features_reference(e).toPandas()
+            .sort_values("user_id").reset_index(drop=True))
+    assert len(got) > 1
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
 def test_user_features_round4_tie_semantics(spark, tmp_path):
@@ -1775,8 +1795,8 @@ def test_lsh_sig_cache_disk_tier_over_limit(spark, sf_smoke_dir, monkeypatch):
     finally:
         for df, w, l in ((over, 5, 3), (under, 5, 4)):
             df.unpersist()
-            vectors._LSH_SIGS_MEMO.pop(
-                (app, "lsh_sigs", sf_smoke_dir, w, l), None)
+            vectors.lsh_corpus_sigs.memo.pop(
+                (app, sf_smoke_dir, w, l, 500), None)
 
 
 def test_corpus_vec_count_sees_in_place_rebuild(tmp_path):

@@ -90,8 +90,8 @@ def main() -> int:
     t0 = time.time()
     rows = df.count()
     t1 = time.time() - t0
-    key = (spark.sparkContext.applicationId, "lsh_sigs", fixture, w, L)
-    sigs = vectors._LSH_SIGS_MEMO.get(key)
+    key = (spark.sparkContext.applicationId, fixture, w, L, n)
+    sigs = vectors.lsh_corpus_sigs.memo.get(key)
     level = sigs.storageLevel if sigs is not None else None
     print(f"e2e slice (id_a % {k} == 0): {rows:,} output pairs in "
           f"{t1:.0f}s; sig cache storageLevel={level}", flush=True)

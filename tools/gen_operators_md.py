@@ -57,7 +57,7 @@ def main() -> None:
         "  dropDuplicatesWithinWatermark, applyInPandasWithState running stats,",
         "  stream-stream attribution join, foreachBatch idempotent sink",
         "- `operators/skew.py`: salted aggregate / salted join",
-        "- `operators/grouped.py`: applyInPandas + partition-grouped mapInPandas",
+        "- `operators/grouped.py`: cogrouped applyInPandas as-of join",
         "- `operators/chunking.py`: Python UDTF text chunking",
         "- `operators/multimodal.py`: binary payload decode / frame sampling",
         "- `operators/sampling.py`: stratified sampling, unique/consecutive row ids",
