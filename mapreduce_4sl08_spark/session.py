@@ -26,6 +26,19 @@ local[32]:
 - parquet.nanosAsLong: events.parquet has shipped as TIMESTAMP(NANOS),
   which Spark reads only as an epoch-ns long; sources/tables.load_table
   converts it. Set once per session here, never per load.
+- streaming checkpointFileManagerClass, local masters only
+  (``LOCAL_CONF``): Spark's default FileContext manager renames every
+  offset, commit and state-delta file through ``FileContext.rename``,
+  which looks up the source's link status first; pyspark's bundled
+  Hadoop has no native libhadoop, so that lookup forks a ``readlink``
+  shell per file. The FileSystem-based manager renames with one
+  ``FileSystem.rename`` (a single POSIX rename on ``file:`` paths,
+  where FileContext's no-overwrite rename is itself an existence check
+  plus that rename) and writes the same files, checksums included.
+  ``cluster_conf`` keeps the default: on HDFS FileContext's
+  no-overwrite rename is atomic in the NameNode. Each created file and
+  its ``.crc`` still forks a ``chmod`` shell; only a native libhadoop
+  removes those.
 """
 
 from __future__ import annotations
@@ -61,6 +74,13 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+# Applied on local masters only (module docstring).
+LOCAL_CONF: dict[str, str] = {
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
 
 
 def _size_shuffle_to_task_slots(spark: SparkSession) -> None:
@@ -98,6 +118,7 @@ def get_session(app_name: str = "mapreduce_4sl08_spark",
         # session in a process (the JVM is launched then); harmless after.
         conf.setdefault("spark.driver.memory",
                         os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        conf.update(LOCAL_CONF)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -212,9 +233,13 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     session (the driver hands us one in ``__spark_entry__.entry``).
     Static confs (serializer, arrow) are skipped automatically by Spark.
     Shuffle partitions follow the same rule as ``get_session``: one per
-    task slot of the session's context.
+    task slot of the session's context, and a local master gets
+    ``LOCAL_CONF`` as well.
     """
-    for k, v in ENGINE_CONF.items():
+    conf = dict(ENGINE_CONF)
+    if spark.sparkContext.master.startswith("local"):
+        conf.update(LOCAL_CONF)
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:

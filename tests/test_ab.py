@@ -43,6 +43,16 @@ def test_pair_order_alternates_by_seed_parity(dirs, tmp_path):
         (s, "w", str(n)) for s, n in calls]
 
 
+def test_pair_order_from_an_even_first_seed(dirs, tmp_path):
+    """Seeds K..K+N-1 keep the parity rule: an even first seed runs the
+    change first."""
+    calls = []
+    runner = fake_runner({"parent": [1.0] * 14, "change": [1.0] * 14}, calls)
+    assert ab(SPEC, dirs, 3, tmp_path / "log.txt", runner, first_seed=12) == 0
+    assert calls == [("change", 12), ("parent", 12), ("parent", 13),
+                     ("change", 13), ("change", 14), ("parent", 14)]
+
+
 def test_a_failed_check_exits_nonzero(dirs, tmp_path):
     runner = fake_runner({"parent": [1.0] * 3, "change": [1.0] * 3}, [],
                          correct=lambda side, seed: (side, seed) != ("change", 2))

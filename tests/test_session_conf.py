@@ -12,7 +12,11 @@
    through its private-API path (a canary for Spark-internal drift), is
    a silent no-op on a frame without one, and lets errors other than
    Py4J/attribute ones propagate; the connected-components loop that
-   frees each round's labels keeps a bounded number resident.
+   frees each round's labels keeps a bounded number resident;
+5. local masters (``get_session`` and ``apply_engine_conf``) run
+   streaming checkpoints on Spark's FileSystem-based file manager
+   (``LOCAL_CONF``), ``cluster_conf`` keeps Spark's default, and the
+   configured class still loads.
 """
 
 from __future__ import annotations
@@ -23,8 +27,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_4sl08_spark.session import (
-    ENGINE_CONF, SHUFFLE_PARTITIONS, apply_engine_conf, free_checkpoint,
-    get_session, truncate_lineage)
+    ENGINE_CONF, LOCAL_CONF, SHUFFLE_PARTITIONS, apply_engine_conf,
+    cluster_conf, free_checkpoint, get_session, truncate_lineage)
 from mapreduce_4sl08_spark.sources.tables import TABLE_NAMES, load_table
 
 
@@ -51,6 +55,39 @@ def test_get_session_extra_conf_count_wins(spark):
         assert sized.conf.get(SHUFFLE_PARTITIONS) == str(slots)
     finally:
         spark.conf.set(SHUFFLE_PARTITIONS, prev)
+
+
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FS_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+              "FileSystemBasedCheckpointFileManager")
+
+
+def test_local_get_session_uses_filesystem_checkpoint_manager(spark):
+    local = get_session("tests", extra_conf={
+        SHUFFLE_PARTITIONS: spark.conf.get(SHUFFLE_PARTITIONS),
+        "spark.ui.enabled": "false"})
+    assert local.sparkContext.master.startswith("local")
+    assert local.conf.get(CKPT_MANAGER) == FS_MANAGER
+
+
+def test_apply_engine_conf_sets_local_checkpoint_manager(spark):
+    fresh = spark.newSession()
+    fresh.conf.unset(CKPT_MANAGER)
+    assert fresh.conf.get(CKPT_MANAGER, None) is None
+    apply_engine_conf(fresh)
+    assert fresh.conf.get(CKPT_MANAGER) == FS_MANAGER
+
+
+def test_cluster_conf_keeps_default_checkpoint_manager():
+    assert CKPT_MANAGER not in cluster_conf(64, 10**12)
+
+
+def test_local_checkpoint_manager_class_loads(spark):
+    """Canary: Spark moved this class between 3.5 and 4.x (it gained
+    ``.checkpointing``); if it moves again, every stream on a local
+    master fails at start with cannotLoadCheckpointFileManagerClass."""
+    name = LOCAL_CONF[CKPT_MANAGER]
+    assert spark._jvm.java.lang.Class.forName(name).getName() == name
 
 
 def test_load_table_writes_no_session_conf(spark, sf_smoke_dir, monkeypatch):

@@ -716,27 +716,32 @@ def test_stream_quarantine_boundary_is_session_tz_invariant(
     assert kept_ids("Asia/Kathmandu") == [2, 3, 5, 6]  # +05:45 offset
 
 
-def _drain_with_shuffle_partitions(spark, stream_df, name, n, output_mode):
-    """Drain ``stream_df`` with ``spark.sql.shuffle.partitions`` = n set
-    only around start() — the query fixes its state-store partition
-    count there — and return (sorted emitted rows, the state partition
-    counts its progress reports)."""
-    import json
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+def _drain_with_conf(spark, stream_df, name, key, value, output_mode,
+                     checkpoint=None):
+    """Drain ``stream_df`` into a memory table with session conf ``key``
+    set to ``value`` (None: unset) only around start() — the query
+    fixes its state-store partition count and its checkpoint file
+    manager there — and return (sorted emitted rows, the query)."""
+    def put(v):
+        if v is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, v)
+
+    prev = spark.conf.get(key, None)
+    put(value)
     try:
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode(output_mode).trigger(availableNow=True).start())
+        writer = (stream_df.writeStream.format("memory").queryName(name)
+                  .outputMode(output_mode).trigger(availableNow=True))
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        q = writer.start()
     finally:
-        spark.conf.set(key, prev)
+        put(prev)
     q.awaitTermination()
-    state_parts = {op["numShufflePartitions"]
-                   for p in q.recentProgress
-                   for op in json.loads(p.json)["stateOperators"]}
     rows = sorted(tuple(r) for r in spark.table(name).collect())
     spark.catalog.dropTempView(name)
-    return rows, state_parts
+    return rows, q
 
 
 @pytest.mark.parametrize("op_name,output_mode", [
@@ -752,15 +757,59 @@ def test_stream_results_invariant_to_shuffle_partitions(spark, events_dir,
     else — the rows emitted at 1, 2 and 32 partitions are exactly
     equal (one file per trigger, so state carries across
     micro-batches)."""
+    import json
     from mapreduce_4sl08_spark.streaming import ops
     operator = getattr(ops, op_name)
     results = {}
     for n in (1, 2, 32):
         stream = operator(events_stream(spark, events_dir,
                                        max_files_per_trigger=1))
-        rows, state_parts = _drain_with_shuffle_partitions(
-            spark, stream, f"t_parts_{op_name}_{n}", n, output_mode)
+        rows, q = _drain_with_conf(spark, stream, f"t_parts_{op_name}_{n}",
+                                   "spark.sql.shuffle.partitions", str(n),
+                                   output_mode)
+        state_parts = {op["numShufflePartitions"]
+                       for p in q.recentProgress
+                       for op in json.loads(p.json)["stateOperators"]}
         assert state_parts == {n}, (n, state_parts)
         results[n] = rows
     assert len(results[1]) > 0
     assert results[1] == results[2] == results[32]
+
+
+@pytest.mark.parametrize("op_name", ["stream_tumbling_counts",
+                                     "stream_session_window"])
+def test_stream_invariant_to_checkpoint_file_manager(spark, events_dir,
+                                                     op_name, tmp_path):
+    """The FileSystem-based checkpoint file manager that
+    session.LOCAL_CONF sets on local masters changes how checkpoint
+    files are renamed into place and nothing else: against Spark's
+    FileContext default (the conf unset) the emitted rows are exactly
+    equal and the checkpoint holds the same files, Hadoop ``.crc`` and
+    state ``.delta.crc`` checksums included."""
+    from mapreduce_4sl08_spark.session import LOCAL_CONF
+    from mapreduce_4sl08_spark.streaming import ops
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    operator = getattr(ops, op_name)
+    results = []
+    for arm, manager, cls in (
+            ("default", None, pkg + "FileContextBasedCheckpointFileManager"),
+            ("local", LOCAL_CONF[key], LOCAL_CONF[key])):
+        ckpt = tmp_path / arm
+        stream = operator(events_stream(spark, events_dir,
+                                        max_files_per_trigger=1))
+        rows, q = _drain_with_conf(spark, stream, f"t_ckpt_{op_name}_{arm}",
+                                   key, manager, "append", str(ckpt))
+        # the arm really ran on its manager (the offset log's, read
+        # through Spark internals)
+        assert (q._jsq.streamingQuery().offsetLog().fileManager()
+                .getClass().getName()) == cls
+        files = {str(p.relative_to(ckpt)) for p in ckpt.rglob("*")
+                 if p.is_file()}
+        results.append((rows, files))
+    (rows_default, files_default), (rows_local, files_local) = results
+    assert len(rows_default) > 0
+    assert rows_local == rows_default
+    assert any(f.endswith(".delta.crc") for f in files_default)
+    assert "offsets/.0.crc" in files_default
+    assert files_local == files_default

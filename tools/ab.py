@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Interleaved A/B of two revisions on the repo benchmark.
 
-    python tools/ab.py PARENT [CHANGE] [--pairs N]
+    python tools/ab.py PARENT [CHANGE] [--pairs N] [--first-seed K]
 
 Checks PARENT, and CHANGE when given, out as detached git worktrees;
 without CHANGE the change side is the working tree. For every workload
-in BENCHMARK.json and seeds 1..N (default 10) it runs
+in BENCHMARK.json and seeds K..K+N-1 (default 1..10) it runs
 ``perfbench/run.py --trace 0`` for the file's ``run_seconds`` on each
 side, the parent first on odd seeds, and appends every result line to
 one file under ``logs/``. Then, per workload and end-to-end metric, it
@@ -86,12 +86,13 @@ def verdict(parent: list[float], change: list[float], bound: float,
 
 
 def run_pairs(spec: dict, dirs: dict[str, Path], pairs: int, log: Path,
-              runner=perfbench) -> list[dict]:
-    """Run every workload on both sides for seeds 1..pairs, appending
-    each result line to ``log``; returns one record per run."""
+              runner=perfbench, first_seed: int = 1) -> list[dict]:
+    """Run every workload on both sides for seeds
+    first_seed..first_seed+pairs-1, appending each result line to
+    ``log``; returns one record per run."""
     recs = []
     for w in spec["workloads"]:
-        for seed in range(1, pairs + 1):
+        for seed in range(first_seed, first_seed + pairs):
             for side in order(seed):
                 t0 = time.perf_counter()
                 rc, line = runner(spec, dirs[side], w["name"], seed)
@@ -129,8 +130,9 @@ def summary(spec: dict, recs: list[dict]) -> list[str]:
     return out
 
 
-def ab(spec: dict, dirs: dict[str, Path], pairs: int, log: Path, runner=perfbench) -> int:
-    recs = run_pairs(spec, dirs, pairs, log, runner)
+def ab(spec: dict, dirs: dict[str, Path], pairs: int, log: Path, runner=perfbench,
+       first_seed: int = 1) -> int:
+    recs = run_pairs(spec, dirs, pairs, log, runner, first_seed)
     lines = summary(spec, recs)
     print("\n".join(lines))
     with log.open("a") as f:
@@ -151,6 +153,7 @@ def main() -> int:
     ap.add_argument("parent")
     ap.add_argument("change", nargs="?", help="a revision; default: the working tree")
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1)
     args = ap.parse_args()
     if args.pairs < 1:
         ap.error("--pairs must be at least 1")
@@ -168,8 +171,9 @@ def main() -> int:
         with log.open("a") as f:
             f.write(f"# perfbench/run.py --seconds {spec['run_seconds']} --trace 0; "
                     f"parent {revs['parent']}, change {revs.get('change', 'working tree')}; "
+                    f"seeds {args.first_seed}..{args.first_seed + args.pairs - 1}, "
                     f"odd seeds run the parent first\n")
-        return ab(spec, dirs, args.pairs, log)
+        return ab(spec, dirs, args.pairs, log, first_seed=args.first_seed)
     finally:
         for side in revs:
             subprocess.run(["git", "-C", str(REPO), "worktree", "remove", "--force",

@@ -43,8 +43,11 @@ def main() -> None:
         "| query | module | oracle | proven | description |",
         "|---|---|---|---|---|",
     ]
-    for name, spec in QUERIES.items():
-        module = spec.fn.__module__.rsplit(".", 1)[-1]
+    # rows in (module, name) order, not registry order: reprioritizing
+    # the registry must not reorder the table
+    rows = sorted((spec.fn.__module__.rsplit(".", 1)[-1], name, spec)
+                  for name, spec in QUERIES.items())
+    for module, name, spec in rows:
         oracle = "yes" if spec.oracle else "rows-only"
         rnd = f"r{proven[name]}" if name in proven else "never"
         lines.append(
