@@ -88,168 +88,85 @@ _MODULE_SPECS = [
     for spec in _MODULE_SPECS
 ]
 
-# Driver CORRECTNESS coverage history (the driver checks ~50 rows per
-# round, in registry order). Ordering policy:
-#   1. _ROUND_PRIORITY — rows whose plan or oracle CHANGED this round and
-#      must be re-proven first.
-#   2. Never-driver-checked queries (new this round) — sort next.
-#   3. Remaining queries by last-proven round, least recent first.
-#
-# The per-round checked history lives in checked_history.json (one key
-# per driver round, listing the CORRECTNESS_r{N}.json names that went
-# triple-green); only the CURRENT round's priority tuple stays in code
-# (VERDICT r7 item 2 — the frozensets were growing ~50 names/round).
-# End-of-round ritual: append the new round's names to the JSON, then
-# rewrite this tuple for the next round's changed plans.
-_ROUND_PRIORITY: tuple[str, ...] = (
-    # Plans that tools/gen_plan_fingerprints.py reports changed:
-    # per-user features are built-ins (plans/events.user_sequence_features),
-    # and the IVF centroids load their own vectors (@session_memo).
-    "events_user_features",
-    "ivf_recall_eval",
-    # Plan and oracle changed: the word count lowercases, then deletes
-    # `\W`, once per line (operators/wordcount.words_from_lines).
-    "wordcount_documents",
-    # round 22 (optimization round 2; VERDICT r21 "Next round" list).
-    # ORDER IS THE DRIVER'S PROOF BUDGET ALLOCATION (see _order_key).
-    # Block 1 — the 29 rows whose PLAN changed this round: fanout=True
-    # at the remaining documents call sites (VERDICT r21 item 2 — the
-    # keep-cardinality class plus langid_confusion_matrix, the one
-    # heavy-map/low-card-agg winner of the r22 interleaved A/B,
-    # logs/ab_fanout_lowcard_r22.txt). All value-identical, proven by
-    # full 168/168 sweeps at sf0.001 AND sf0.01 with every site active
-    # (logs/sweep_r22_c1_sf01.log), but the driver must re-prove them
-    # first per the plan-drift gate. The posting-builder consumers
-    # (tfidf/unigram/bigram/zipf/oov/pmi) lead — one shared-helper
-    # change covers six rows.
-    "corpus_curation_pipeline",
-    "tfidf_top_terms",
-    "unigram_rarity_score",
-    "bigram_surprisal_score",
-    "zipf_rank_frequency",
-    "oov_rate_by_lang",
-    "token_pmi_top_pairs",
-    "decontamination_overlap",
-    "lexical_diversity_stats",
-    "vocab_growth_curve",
-    "text_char_trigram_profile",
-    "langid_confusion_matrix",
-    "text_token_stats",
-    "text_token_positions",
-    "text_quality_score",
-    "text_language_id",
-    "text_repetition_stats",
-    "quality_rules_audit",
-    "doc_fingerprint",
-    "winnowing_fingerprints",
-    "span_dedup_report",
-    "boilerplate_template_clusters",
-    "text_bigram_top20",
-    "array_functions_showcase",
-    "docs_with_embeddings",
-    "sequence_packing_bins",
-    "bpe_pretokenize_counts",
-    "token_budget_selection",
-    "cluster_best_survivor",
-    # Block 2 — EXECUTION changed, plan identical: the CC loop now
-    # frees each superseded label checkpoint after the next round's
-    # convergence aggregate materializes (session.free_checkpoint).
-    # The jaccard-verify counting join and the pagerank eager+free
-    # variants were TRIED and REVERTED on interleaved A/B losses
-    # (logs/ab_jaccard_verify_r22.txt, ab_pagerank_r22.txt), so those
-    # plans and executions equal r21's proven state.
-    "dedup_connected_components",
-    "dedup_cluster_stats",
-    # fingerprint drifted in round 22, not yet re-proven
-    "ivf_ann",
-    # Block 3 — proof-staleness tail, least-recently-proven first
-    # (r17 rows, then r18 — from checked_history.json after merging
-    # the 50 r21-green rows).
-    "dedup_exact_documents",
-    "mixture_sampling_weights",
-    "mixture_weighted_sample",
-    "session_path_topk",
-    "source_dup_quality_audit",
-    "source_mix_report",
-    "text_chunking_udtf",
-    "watchlist_term_scan",
-    "tokenizer_fertility_by_lang",
-    "bucketed_join_zero_shuffle",
-    "column_profile_documents",
-    "column_profile_events",
-    "column_profile_lineitem",
-    "column_profile_orders",
-    "supplier_concentration_hhi",
-    "weighted_median_price_by_nation",
-    "window_trailing_30d_spend",
-)
-
-_HISTORY_PATH = Path(__file__).with_name("checked_history.json")
+# Driver proof order. The driver checks ~50 rows per round, in registry
+# order, so the registry leads with the rows whose last proof no longer
+# covers them:
+#   1. re-prove first: the plan fingerprint or oracle-SQL digest in
+#      plan_fingerprints.json differs from the one recorded at the
+#      query's last triple-green proof (checked_history.json);
+#   2. never proven;
+#   3. everything else, least recently proven first.
+# Both files are data: after a plan or oracle edit, regenerate the
+# snapshot (tools/gen_plan_fingerprints.py; the drift test fails until
+# it matches the live registry); after each driver round, merge its
+# CORRECTNESS file (tools/update_checked_history.py).
+_SNAPSHOT_PATH = Path(__file__).with_name("plan_fingerprints.json")
+_RECORD_PATH = Path(__file__).with_name("checked_history.json")
 
 
-def _load_history(path: Path) -> dict[str, list[str]]:
-    """The history only ORDERS the driver's correctness budget — it must
-    never take the whole query surface down with it. On an unreadable or
-    corrupt file, degrade to "nothing ever checked" (every row sorts
-    into the re-prove-first bucket) and say so loudly; the invariant
-    tests pin the committed file as present and well-formed."""
+def _load_entries(path: Path, fields: dict[str, type]) -> dict[str, dict]:
+    """``{query name: {field: value}}`` from ``path``, every entry
+    holding ``fields`` with exactly those types. The files only ORDER
+    the driver's correctness budget, so they must never take the query
+    surface down with them: on an unreadable, corrupt or wrongly shaped
+    file, warn loudly and order as if it were empty (an empty record
+    makes every query never proven; an empty snapshot makes every proof
+    stale). The invariant tests pin the committed files as well-formed."""
     try:
         with path.open(encoding="utf-8") as fh:
             raw = json.load(fh)
-        # shape-validate BEFORE anything downstream iterates: valid JSON
-        # of the wrong shape (typo'd round key, string instead of list)
-        # must degrade identically, not crash int()/.items() at import —
-        # or worse, silently iterate a string per-character
+        # shape-validate BEFORE the order key reads it: valid JSON of
+        # the wrong shape must degrade identically, not crash at import
         if not isinstance(raw, dict):
-            raise ValueError("top level must be an object of round->names")
-        for k, v in raw.items():
-            # isdecimal + isascii, not isdigit: '²'.isdigit() is True
-            # but int('²') raises — the crash this guard exists to stop
-            if not (isinstance(k, str) and k.isascii() and k.isdecimal()):
-                raise ValueError(f"round key {k!r} is not a digit string")
-            if not (isinstance(v, list)
-                    and all(isinstance(n, str) for n in v)):
-                raise ValueError(f"round {k}: names must be a list of strings")
+            raise ValueError("top level must be an object of name -> entry")
+        for name, entry in raw.items():
+            # type() is, not isinstance: True must not pass as a round
+            if not (isinstance(entry, dict) and all(
+                    type(entry.get(k)) is t for k, t in fields.items())):
+                raise ValueError(f"{name}: entry must hold {list(fields)}")
         return raw
     except (OSError, ValueError, RecursionError) as e:
         # RecursionError: json.load on pathologically nested garbage
         # ('[[[[…') — still just a corrupt file, still must degrade
-        warnings.warn(
-            f"checked_history.json unreadable ({e}); treating every "
-            f"query as never driver-checked", RuntimeWarning)
+        warnings.warn(f"{path.name} unreadable ({e}); ordering as if it "
+                      f"were empty", RuntimeWarning)
         return {}
 
 
-_HISTORY_RAW: dict[str, list[str]] = _load_history(_HISTORY_PATH)
-
-#: name -> most recent driver round in which it went triple-green
-_LAST_PROVEN: dict[str, int] = {}
-for _round_str, _names in _HISTORY_RAW.items():
-    _rnd = int(_round_str)
-    for _name in _names:
-        _LAST_PROVEN[_name] = max(_LAST_PROVEN.get(_name, 0), _rnd)
-
-def _order_key(s: QuerySpec) -> tuple[int, int]:
-    if s.name in _ROUND_PRIORITY:
-        # tuple POSITION breaks ties (r17): when the priority block
-        # exceeds the driver's ~50-row budget, the rows listed first —
-        # Spark-plan and execution-side changes, the highest-information
-        # re-proofs — must be the ones the budget covers; a (0, 0) tie
-        # fell back to module order, which could spend the whole budget
-        # on provably-ASCII-no-op oracle rewrites instead
-        return (0, _ROUND_PRIORITY.index(s.name))
-    if s.name not in _LAST_PROVEN:
-        return (1, 0)  # never driver-checked (new this round)
-    # Remaining: least-recently-proven first (LRU rotation) — each
-    # round's ~50-row driver budget covers the priority rows plus the
-    # stalest block (after r8 that is the 34 rows last proven in r6).
-    return (2, _LAST_PROVEN[s.name])
+#: name -> {"plan": md5, "oracle": md5} of the current registry
+SNAPSHOT: dict[str, dict] = _load_entries(
+    _SNAPSHOT_PATH, {"plan": str, "oracle": str})
+#: name -> {"round": N, "plan": md5, "oracle": md5} at its last proof
+RECORD: dict[str, dict] = _load_entries(
+    _RECORD_PATH, {"round": int, "plan": str, "oracle": str})
 
 
-_ALL_SPECS: list[QuerySpec] = sorted(_MODULE_SPECS, key=_order_key)
+def _proof_key(name: str, snapshot: dict, record: dict) -> tuple[int, int]:
+    proof = record.get(name)
+    if proof is None:
+        return (1, 0)
+    now = snapshot.get(name, {})
+    stale = (now.get("plan"), now.get("oracle")) != (
+        proof["plan"], proof["oracle"])
+    return (0 if stale else 2, proof["round"])
+
+
+def proof_order(specs: list[QuerySpec], snapshot: dict,
+                record: dict) -> list[QuerySpec]:
+    """``specs`` in driver proof order (see above); ties, least recently
+    proven first, then module order."""
+    return sorted(specs, key=lambda s: _proof_key(s.name, snapshot, record))
+
+
+_ALL_SPECS: list[QuerySpec] = proof_order(_MODULE_SPECS, SNAPSHOT, RECORD)
 
 QUERIES: dict[str, QuerySpec] = {s.name: s for s in _ALL_SPECS}
 assert len(QUERIES) == len(_ALL_SPECS), "duplicate query name in registry"
+
+
+def reprove_names() -> list[str]:
+    """The re-prove-first block, in registry order."""
+    return [n for n in QUERIES if _proof_key(n, SNAPSHOT, RECORD)[0] == 0]
 
 
 def _with_engine_conf(

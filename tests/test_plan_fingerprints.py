@@ -1,37 +1,33 @@
 """Plan-drift gate for the correctness treadmill (r8).
 
-Every registry query's analyzed-plan fingerprint is snapshotted in
-plan_fingerprints.json. A query whose live fingerprint drifts from the
-snapshot MUST be in ``registry._ROUND_PRIORITY`` — the driver's next
-correctness budget then re-proves it first. This mechanizes the policy
-that was violated by hand twice (r6 ADVICE: dedup_minhash_lsh missed
-after a shared-helper refactor; r8: minhash + near_dup_containment
-missed again after the _verify_pairs rewrite until a manual call-site
-audit caught it). Regenerate the snapshot with
-``python tools/gen_plan_fingerprints.py`` (it refuses to paper over a
-drifted query that is not in the priority tuple).
+Every registry query's analyzed-plan fingerprint and oracle-SQL digest
+are snapshotted in mapreduce_4sl08_spark/plans/plan_fingerprints.json,
+and the registry orders the driver's proof budget from that snapshot: a
+query whose digests differ from the ones recorded at its last proof is
+re-proven first. So the snapshot must equal the live registry: these
+tests fail on any drift until the snapshot is regenerated with
+``python tools/gen_plan_fingerprints.py`` — which in turn moves the
+drifted queries to the front of the driver's order. This mechanizes
+the policy that was violated by hand twice (r6 ADVICE: dedup_minhash_lsh
+missed after a shared-helper refactor; r8: minhash +
+near_dup_containment missed again after the _verify_pairs rewrite).
 """
 
 import importlib.util
-import json
 import os
 
 import pytest
 
-from mapreduce_4sl08_spark.plans import QUERIES, registry
+from mapreduce_4sl08_spark.plans import QUERIES, oracle_sqls
+from mapreduce_4sl08_spark.plans.registry import SNAPSHOT as _SNAPSHOT
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
-_SNAPSHOT_PATH = os.path.join(_HERE, "plan_fingerprints.json")
 
 _spec = importlib.util.spec_from_file_location(
     "gen_plan_fingerprints",
     os.path.join(os.path.dirname(_HERE), "tools", "gen_plan_fingerprints.py"))
 _tool = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_tool)
-
-# loaded once — the snapshot file cannot change mid-run
-with open(_SNAPSHOT_PATH) as _f:
-    _SNAPSHOT = json.load(_f)
 
 
 def test_normalize_plan_renumbers_ids_but_not_string_literals():
@@ -80,6 +76,17 @@ def test_fingerprint_snapshot_covers_exactly_the_registry():
         "python tools/gen_plan_fingerprints.py")
 
 
+def test_oracle_digests_match_snapshot():
+    """Spark-free half of the drift gate: every oracle SQL, exactly as
+    the driver receives it, hashes to its snapshot digest."""
+    drifted = sorted(
+        name for name, sql in oracle_sqls().items()
+        if _tool.oracle_digest(sql) != _SNAPSHOT.get(name, {}).get("oracle"))
+    assert drifted == [], (
+        f"oracle SQL changed for {drifted} — regenerate the snapshot with "
+        f"python tools/gen_plan_fingerprints.py")
+
+
 @pytest.fixture(scope="module")
 def _swept(spark, request):
     from tests.parallel_sweep import selected, sweep
@@ -92,13 +99,10 @@ def _swept(spark, request):
         # embedded in the plan's scan, so a divergence would drift all
         # fingerprints at once
         live = _tool.fingerprint(QUERIES[name].fn(spark, _tool.SF_DIR))
-        if live == _SNAPSHOT[name]:
-            return
-        assert name in registry._ROUND_PRIORITY, (
-            f"{name}'s plan changed but it is not in _ROUND_PRIORITY — "
-            f"the driver would never re-prove it. Add it to the priority "
-            f"tuple in plans/registry.py, then regenerate the snapshot "
-            f"with python tools/gen_plan_fingerprints.py")
+        assert live == _SNAPSHOT[name]["plan"], (
+            f"{name}'s plan changed — regenerate the snapshot with "
+            f"python tools/gen_plan_fingerprints.py so the registry "
+            f"orders it into the driver's re-prove-first block")
 
     return sweep(selected(request, "test_plan_drift_requires_priority_reproof"), check)
 
@@ -125,4 +129,4 @@ def test_fingerprint_does_not_depend_on_memo_state(spark):
 
     cold, warm = fingerprints(), fingerprints()
     assert [n for n in QUERIES if cold[n] != warm[n]] == []
-    assert [n for n in QUERIES if cold[n] != _SNAPSHOT[n]] == []
+    assert [n for n in QUERIES if cold[n] != _SNAPSHOT[n]["plan"]] == []

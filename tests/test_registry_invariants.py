@@ -150,50 +150,68 @@ def test_memoized_persists_bounded_across_sweep(spark):
 
 
 def test_driver_checked_bookkeeping_names_exist():
-    """The LRU-rotation bookkeeping must reference real registry names —
-    a typo (or a renamed query) would silently misorder the driver
-    budget. Covers both the in-code priority tuple and every round list
-    in checked_history.json."""
+    """The proof record must reference real registry names — a typo
+    (or a renamed query) would silently misorder the driver budget."""
     from mapreduce_4sl08_spark.plans import registry
 
-    known = set(registry.QUERIES)
-    unknown = set(registry._ROUND_PRIORITY) - known
-    assert not unknown, f"_ROUND_PRIORITY references unknown queries: {unknown}"
-    for round_str, names in registry._HISTORY_RAW.items():
-        assert round_str.isdigit(), f"non-numeric round key {round_str!r}"
-        assert len(names) == len(set(names)), f"duplicates in round {round_str}"
-        unknown = set(names) - known
-        assert not unknown, (
-            f"checked_history.json round {round_str} references unknown "
-            f"queries: {unknown}")
+    unknown = set(registry.RECORD) - set(registry.QUERIES)
+    assert not unknown, (
+        f"checked_history.json references unknown queries: {unknown}")
+    assert all(e["round"] >= 1 for e in registry.RECORD.values())
 
 
 def test_driver_checked_history_ordering():
-    """The registry must order: current-round priority first, then
-    never-checked, then strictly by last-proven round ascending — this
-    IS the treadmill that keeps the cumulative 126-green claim true."""
+    """The registry must order: stale proofs (plan or oracle digest moved
+    since the last proof) first, then never-checked, then strictly by
+    last-proven round ascending — this IS the treadmill that keeps the
+    cumulative 168-green claim true."""
     from mapreduce_4sl08_spark.plans import registry
 
+    record, snapshot = registry.RECORD, registry.SNAPSHOT
+
+    def stale(n):
+        return n in record and (
+            (record[n]["plan"], record[n]["oracle"])
+            != (snapshot[n]["plan"], snapshot[n]["oracle"]))
+
     names = list(registry.QUERIES)
-    n_prio = len(registry._ROUND_PRIORITY)
-    assert set(names[:n_prio]) == set(registry._ROUND_PRIORITY)
-    rest = names[n_prio:]
+    first = registry.reprove_names()
+    assert names[:len(first)] == first
+    assert set(first) == {n for n in names if stale(n)}
+    rest = names[len(first):]
     # never-driver-checked rows (new this round) sort directly after the
-    # priority block, before every history-proven row
-    never = [n for n in rest if n not in registry._LAST_PROVEN]
+    # re-prove block, before every history-proven row
+    never = [n for n in rest if n not in record]
     assert never == rest[:len(never)], (
-        f"never-checked rows must lead the non-priority block: {never}")
-    proven = rest[len(never):]
-    assert all(n in registry._LAST_PROVEN for n in proven)
-    rounds = [registry._LAST_PROVEN[n] for n in proven]
+        f"never-checked rows must lead the proven block: {never}")
+    rounds = [record[n]["round"] for n in rest[len(never):]]
     assert rounds == sorted(rounds), "history rotation out of LRU order"
 
 
-def test_update_checked_history_tool_merge_semantics():
-    """The end-of-round ritual tool (tools/update_checked_history.py)
-    must record only triple-green rows, extend-never-truncate a round's
-    list, and be idempotent — a bug here silently corrupts the LRU
-    treadmill that keeps the cumulative all-green claim true."""
+def test_proof_order_follows_both_digests():
+    """The order is a pure function of (specs, snapshot, record): moving
+    one query's plan digest, or separately its oracle digest, in memory
+    moves that query from the proven tail into the first block."""
+    from mapreduce_4sl08_spark.plans import registry
+
+    specs = list(registry.QUERIES.values())
+    first = set(registry.reprove_names())
+    name = list(registry.QUERIES)[-1]  # the most recently proven
+    n_first = len(first)
+    for field in ("plan", "oracle"):
+        snapshot = dict(registry.SNAPSHOT)
+        snapshot[name] = {**snapshot[name], field: "0" * 32}
+        order = [s.name for s in
+                 registry.proof_order(specs, snapshot, registry.RECORD)]
+        assert set(order[:n_first + 1]) == first | {name}, field
+    # never proven sorts after stale proofs and before proven ones
+    record = {n: e for n, e in registry.RECORD.items() if n != name}
+    order = [s.name for s in
+             registry.proof_order(specs, registry.SNAPSHOT, record)]
+    assert order.index(name) == n_first
+
+
+def _load_update_tool():
     import importlib.util
     import os
 
@@ -203,6 +221,16 @@ def test_update_checked_history_tool_merge_semantics():
         os.path.join(repo, "tools", "update_checked_history.py"))
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
+    return tool
+
+
+def test_update_checked_history_tool_merge_semantics():
+    """The end-of-round ritual tool (tools/update_checked_history.py)
+    must record only triple-green rows, with the round's snapshot
+    digests, never let an older round overwrite a newer record, and be
+    idempotent — a bug here silently corrupts the treadmill that keeps
+    the cumulative all-green claim true."""
+    tool = _load_update_tool()
 
     rows = {
         "good": {"rows_match": True, "schema_match": True,
@@ -215,50 +243,80 @@ def test_update_checked_history_tool_merge_semantics():
     green, red = tool.split_green(rows)
     assert green == ["good"] and red == ["errored", "red_hash"]
 
-    hist = {"2": ["a"], "1": ["b"], "10": ["c"]}
-    out = tool.merge_round(hist, 2, ["z", "a"])
-    assert out["2"] == ["a", "z"]                      # extend, dedup
-    assert list(out) == ["1", "2", "10"]               # numeric key order
-    assert tool.merge_round(out, 2, ["z", "a"]) == out  # idempotent
-    assert hist["2"] == ["a"]                          # input untouched
+    snap = {n: {"plan": f"p-{n}", "oracle": f"o-{n}"} for n in "abcz"}
+    record = {"b": {"round": 9, "plan": "old", "oracle": "old"},
+              "c": {"round": 3, "plan": "old", "oracle": "old"}}
+    out = tool.merge_round(record, 5, ["z", "b", "c"], snap)
+    assert out["z"] == {"round": 5, "plan": "p-z", "oracle": "o-z"}
+    assert out["c"] == {"round": 5, "plan": "p-c", "oracle": "o-c"}
+    assert out["b"] == record["b"]                   # newer record kept
+    assert list(out) == ["b", "c", "z"]
+    assert tool.merge_round(out, 5, ["z", "b", "c"], snap) == out
+    assert record["c"]["round"] == 3                 # input untouched
+
+
+def test_update_checked_history_refuses_uncommitted_file(tmp_path):
+    """Digests come from the snapshot in the commit that added the
+    CORRECTNESS file, so a file git has never seen is refused."""
+    import os
+    import subprocess
+    import sys
+
+    rows = tmp_path / "CORRECTNESS_r99.json"
+    rows.write_text('{"q1_pricing_summary": {"rows_match": true, '
+                    '"schema_match": true, "hash_match": true}}')
+    tool = _load_update_tool()
+    before = open(tool.HISTORY).read()
+    # a file outside the repository, and a repository path git never saw
+    for path in (str(rows), os.path.join(tool.REPO, "CORRECTNESS_r99.json")):
+        proc = subprocess.run([sys.executable, tool.__file__, path, "99"],
+                              capture_output=True, text=True)
+        assert proc.returncode != 0, proc.stdout
+        assert "CORRECTNESS_r99.json" in proc.stderr
+    assert open(tool.HISTORY).read() == before
 
 
 def test_history_load_degrades_loudly_not_fatally(tmp_path):
-    """An unreadable or corrupt checked_history.json must not take the
-    driver-facing query surface down — it only orders the correctness
-    budget. The loader warns and returns empty (= every query sorts
-    into the re-prove bucket)."""
+    """An unreadable or corrupt proof record or snapshot must not take
+    the driver-facing query surface down — they only order the
+    correctness budget. The loader warns and returns empty."""
     from pathlib import Path
 
     import pytest
 
     from mapreduce_4sl08_spark.plans import registry
 
-    with pytest.warns(RuntimeWarning, match="never driver-checked"):
-        assert registry._load_history(Path(str(tmp_path / "missing.json"))) == {}
+    fields = {"round": int, "plan": str, "oracle": str}
+    with pytest.warns(RuntimeWarning, match="unreadable"):
+        assert registry._load_entries(
+            Path(str(tmp_path / "missing.json")), fields) == {}
 
     bad = tmp_path / "corrupt.json"
     bad.write_text("{not json")
-    with pytest.warns(RuntimeWarning, match="never driver-checked"):
-        assert registry._load_history(Path(str(bad))) == {}
+    with pytest.warns(RuntimeWarning, match="unreadable"):
+        assert registry._load_entries(Path(str(bad)), fields) == {}
 
-    # valid JSON, wrong shape: typo'd round key, string-valued round
-    # (would otherwise iterate per-character), non-dict top level
+    # valid JSON, wrong shape: old round->names layout, string-valued
+    # entry, missing digest, bool or string round, non-dict top level
     deep = "[" * 3000 + "]" * 3000  # RecursionError inside json.load
-    for payload in ('{"r7": ["dedup_ngram_jaccard"]}',
-                    '{"\u00b2": ["x"]}',  # isdigit()-true, int()-invalid
-                    '{"7": "dedup_ngram_jaccard"}',
+    for payload in ('{"7": ["dedup_ngram_jaccard"]}',
+                    '{"q": "dedup_ngram_jaccard"}',
+                    '{"q": {"round": 7, "plan": "x"}}',
+                    '{"q": {"round": true, "plan": "x", "oracle": "y"}}',
+                    '{"q": {"round": "7", "plan": "x", "oracle": "y"}}',
                     '["dedup_ngram_jaccard"]', 'null', deep):
         shaped = tmp_path / "shaped.json"
         shaped.write_text(payload)
-        with pytest.warns(RuntimeWarning, match="never driver-checked"):
-            assert registry._load_history(Path(str(shaped))) == {}, payload
+        with pytest.warns(RuntimeWarning, match="unreadable"):
+            assert registry._load_entries(Path(str(shaped)), fields) == {}, payload
 
-    # and the committed file itself loads clean, without warnings
+    # and the committed files themselves load clean, without warnings
     import warnings as w
     with w.catch_warnings():
         w.simplefilter("error")
-        assert registry._load_history(registry._HISTORY_PATH)
+        assert registry._load_entries(registry._RECORD_PATH, fields)
+        assert registry._load_entries(
+            registry._SNAPSHOT_PATH, {"plan": str, "oracle": str})
 
 
 def test_oracle_whitespace_contract():

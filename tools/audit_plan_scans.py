@@ -3,7 +3,8 @@
 each BIG table's files appear in the physical plan, how many exchanges
 the plan carries, and whether any disallowed shapes slipped in. This is
 an informational radar (the enforced gates live in
-tests/test_registry_invariants.py and tests/plan_fingerprints.json) —
+tests/test_registry_invariants.py and the plan snapshot
+mapreduce_4sl08_spark/plans/plan_fingerprints.json) —
 use it after adding operators to spot accidental multi-scan pipelines
 of corpus-sized tables (the class fixed in rolling_active_users /
 events_transition_matrix / vocab_growth_curve, round 12).

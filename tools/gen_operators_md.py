@@ -9,23 +9,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_4sl08_spark.plans import QUERIES  # noqa: E402
-from mapreduce_4sl08_spark.plans.registry import _load_history  # noqa: E402
-from mapreduce_4sl08_spark.plans.registry import _HISTORY_PATH  # noqa: E402
-
-
-def _last_proven() -> dict:
-    """query name -> latest driver round with a triple-green CORRECTNESS
-    row (from checked_history.json), so driver-proof staleness is
-    visible in-repo (VERDICT r12 item 8)."""
-    latest: dict = {}
-    for rnd, names in _load_history(_HISTORY_PATH).items():
-        for n in names:
-            latest[n] = max(latest.get(n, 0), int(rnd))
-    return latest
+from mapreduce_4sl08_spark.plans.registry import RECORD  # noqa: E402
 
 
 def main() -> None:
-    proven = _last_proven()
+    # latest triple-green driver round per query, so driver-proof
+    # staleness is visible in-repo (VERDICT r12 item 8)
+    proven = {name: entry["round"] for name, entry in RECORD.items()}
     lines = [
         "# Operator / query inventory (auto-generated — tools/gen_operators_md.py)",
         "",

@@ -1,24 +1,21 @@
-"""Generate tests/plan_fingerprints.json — one md5 per registry query
-over its NORMALIZED analyzed logical plan at sf0.001.
+"""Generate mapreduce_4sl08_spark/plans/plan_fingerprints.json: per
+registry query, the md5 of its NORMALIZED analyzed logical plan at
+sf0.001 and the md5 of its oracle SQL exactly as ``oracle_sqls()``
+serves it (ts-quarantine wrapper applied).
 
-This mechanizes the correctness-treadmill policy that has been violated
-twice by hand (r6 ADVICE, r8 consumer audit): "any query whose plan
-changed this round must be in registry._ROUND_PRIORITY so the driver
-re-proves it first". tests/test_plan_fingerprints.py compares live
-fingerprints against this snapshot and FAILS any drifted query that is
-not in the priority tuple — a shared-helper edit can no longer silently
-skip its consumers' re-proof.
+The registry orders the driver's proof budget from this snapshot: a
+query whose snapshot digests differ from the ones recorded at its last
+triple-green proof (plans/checked_history.json) is re-proven first.
+tests/test_plan_fingerprints.py fails while any live digest differs
+from the snapshot, so the ritual is: after a plan or oracle edit, run
+this tool and commit the snapshot with the edit; after each driver
+round, merge its CORRECTNESS file with tools/update_checked_history.py.
 
 The ANALYZED plan (pre-cache-substitution, pre-AQE) is used because it
 is deterministic across sessions and cache states; expression ids
 (#123) are normalized away. Verified stable across fresh processes.
 
-Regeneration ritual (end of round, or after an intentional plan
-change): run this tool. It refuses to overwrite a drifted fingerprint
-whose query is NOT in _ROUND_PRIORITY — add the query there first
-(that is the whole point); --force overrides for bulk resets.
-
-    python tools/gen_plan_fingerprints.py [--force]
+    python tools/gen_plan_fingerprints.py
 """
 from __future__ import annotations
 
@@ -31,7 +28,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SNAPSHOT = os.path.join(REPO, "tests", "plan_fingerprints.json")
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -101,40 +97,32 @@ def normalize_plan(plan: str) -> str:
     return norm
 
 
+def oracle_digest(sql: str) -> str:
+    return hashlib.md5(sql.encode()).hexdigest()
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    unknown = [a for a in args if a != "--force"]
-    if unknown:
+    if sys.argv[1:]:
         # fail fast BEFORE the Spark session spin-up + full-registry
         # plan build — same convention as tools/make_scale_fixture.py
-        sys.exit(f"usage: {sys.argv[0]} [--force]\n(got {unknown!r})")
-    force = "--force" in args
+        sys.exit(f"usage: {sys.argv[0]}\n(got {sys.argv[1:]!r})")
     from mapreduce_4sl08_spark.plans import QUERIES, registry
     from mapreduce_4sl08_spark.session import get_session
 
     spark = get_session()
-    prior = {}
-    if os.path.exists(SNAPSHOT):
-        with open(SNAPSHOT) as f:
-            prior = json.load(f)
-
-    fresh = {name: fingerprint(spec.fn(spark, SF_DIR))
+    fresh = {name: {"plan": fingerprint(spec.fn(spark, SF_DIR)),
+                    "oracle": oracle_digest(spec.oracle)}
              for name, spec in QUERIES.items()}
 
+    prior = registry.SNAPSHOT
     changed = sorted(n for n in fresh
                      if n in prior and prior[n] != fresh[n])
-    rogue = [n for n in changed if n not in registry._ROUND_PRIORITY]
-    if rogue and not force:
-        sys.exit(
-            f"REFUSING to overwrite drifted fingerprints for queries not "
-            f"in _ROUND_PRIORITY: {rogue}\nAdd them to the priority tuple "
-            f"(they must be driver-re-proven) and re-run, or --force.")
     added = sorted(set(fresh) - set(prior))
     removed = sorted(set(prior) - set(fresh))
-    with open(SNAPSHOT, "w") as f:
+    with open(registry._SNAPSHOT_PATH, "w") as f:
         json.dump(dict(sorted(fresh.items())), f, indent=1)
         f.write("\n")
-    print(f"wrote {SNAPSHOT}: {len(fresh)} queries "
+    print(f"wrote {registry._SNAPSHOT_PATH}: {len(fresh)} queries "
           f"({len(changed)} changed, {len(added)} added, "
           f"{len(removed)} removed)")
     if changed:

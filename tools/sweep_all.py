@@ -1,9 +1,13 @@
 #!/usr/bin/env python
-"""Driver-mode fresh-process correctness sweep over the FULL registry
+"""Driver-mode fresh-process correctness sweep over the registry
 (VERDICT r5 item 6 — the strongest pre-driver signal, pinned as one
 repeatable command):
 
-    python tools/sweep_all.py [sf_dir]
+    python tools/sweep_all.py [sf_dir] [name ...|--reprove]
+
+With no names it sweeps every query; with names, only those; with
+``--reprove``, the registry's re-prove-first block (queries whose plan
+or oracle digest moved since their last driver proof).
 
 Simulates the external driver exactly: a plain SparkSession with
 DRIVER-LIKE settings (local[4], no pytest fixtures, no engine tuning
@@ -13,9 +17,9 @@ hash-compared against its `oracle_sql()` twin in DuckDB via
 tests.oracle.compare_frames (driver-strict: dtypes, tz, column order by
 name, value hash).
 
-Exit 0 = every query green; exit 1 = any mismatch, with a per-query
-FAIL line and the exception. ~2-3 min for the full registry at sf0.01
-on this container. Run before every round end.
+Exit 0 = every swept query green; exit 1 = any mismatch, with a
+per-query FAIL line and the exception; exit 2 = an unknown name. ~2-3
+min for the full registry at sf0.01 on this container. Run before every round end.
 
 Per-query watchdog (r20): the first full-registry sweep at the 10x
 fixture STALLED — DuckDB re-executed an inlined CTE per unrolled
@@ -43,12 +47,24 @@ TABLES = ("region nation customer supplier part orders lineitem "
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:]
 
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
     from tests.oracle import compare_frames
+
+    qs, oracles = E.queries(), E.oracle_sql()
+    if names == ["--reprove"]:
+        from mapreduce_4sl08_spark.plans.registry import reprove_names
+        names = reprove_names()
+    elif not names:
+        names = list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print("unknown queries:", ", ".join(unknown))
+        return 2
 
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.ui.enabled", "false")
@@ -67,10 +83,9 @@ def main() -> int:
     from tools.sweep_watchdog import timeboxed
 
     sc = spark.sparkContext
-    qs, oracles = E.queries(), E.oracle_sql()
     failures: list[str] = []
     t0 = time.perf_counter()
-    for i, name in enumerate(qs, 1):
+    for i, name in enumerate(names, 1):
         tq = time.perf_counter()
         try:
             sc.setJobGroup(name, name, interruptOnCancel=True)
@@ -103,12 +118,12 @@ def main() -> int:
             con = _fresh_con()
         # per-query wall (Spark + DuckDB + compare) so round-over-round
         # sweep logs expose drift, not just red/green
-        print(f"[{i:3d}/{len(qs)}] {status:15s} "
+        print(f"[{i:3d}/{len(names)}] {status:15s} "
               f"{time.perf_counter() - tq:6.2f}s {name}", flush=True)
     dt = time.perf_counter() - t0
 
-    print(f"\nswept {len(qs)} queries in {dt:.0f} s at {sf_dir}: "
-          f"{len(qs) - len(failures)} green, {len(failures)} failed")
+    print(f"\nswept {len(names)} queries in {dt:.0f} s at {sf_dir}: "
+          f"{len(names) - len(failures)} green, {len(failures)} failed")
     if failures:
         print("FAILED:", ", ".join(failures))
     spark.stop()

@@ -16,8 +16,8 @@ It fails unless BOTH hold:
    cannot equal what was validated.
 2. The fast gates pass on a CLEAN CHECKOUT of HEAD (``git archive`` to
    a temp dir, pytest run from there): ``test_plan_fingerprints`` builds
-   every registry plan live, so an analysis-time break in any of the
-   126 queries cannot hide; ``test_registry_invariants`` pins the
+   every registry plan live, so an analysis-time break in any registry
+   query cannot hide; ``test_registry_invariants`` pins the
    registry/oracle/history shape; ``test_bench_isolation`` keeps the
    bench harness loadable. Pass extra node ids for one smoke test per
    module changed this round.
